@@ -1,10 +1,20 @@
 """SparkSession factory.
 
-Local-mode defaults tuned for the sandbox (local[32], single JVM) but every
-setting is the one you'd also want on a 1000-executor cluster: AQE on
-(runtime re-planning + skew-join splitting), Arrow transport for the pandas
-UDF kernels, UTC session timezone (oracle comparability), shuffle
-partitions sized to parallelism rather than the 200 default.
+Local-mode defaults, but every setting is the one you'd also want on a
+1000-executor cluster: AQE on (runtime re-planning + skew-join splitting),
+Arrow transport for the pandas UDF kernels, UTC session timezone (oracle
+comparability), shuffle partitions sized to parallelism rather than the 200
+default.
+
+Driver heap: ``spark.driver.memory`` defaults to ``min(24g, physical
+memory / 4)`` -- the quarter is the JVM's own default heap fraction
+(``-XX:MaxRAMPercentage=25``), the 24g cap keeps the old fixed value on
+hosts with 96 GiB or more.  In local mode the driver JVM *is* the whole
+cluster: driver, every executor, the shuffle and broadcast blocks all live
+in one heap, and G1 grows that heap toward ``-Xmx`` rather than collecting
+hard.  A fixed 24g on a 16 GB host with no swap let the JVM plus the Python
+workers outgrow RAM and the kernel's OOM killer ended the process mid-run.
+``TSN_DRIVER_MEMORY=<size>`` (any Spark size string) overrides the default.
 
 Iceberg: the runtime jars are not present in this sandbox, so the catalog
 config is applied only when ``TSN_ICEBERG_JARS`` is set; the pipeline's
@@ -17,6 +27,29 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+_DRIVER_MEMORY_CAP_MIB = 24 * 1024
+
+
+def _default_driver_memory(phys_bytes: int) -> str:
+    """``min(24g, phys_bytes / 4)`` as a Spark size string, rounded down to
+    whole MiB so the heap never exceeds a quarter of physical memory."""
+    mib = phys_bytes // 4 // (1024 * 1024)
+    if mib >= _DRIVER_MEMORY_CAP_MIB:
+        return "24g"
+    return f"{mib}m"
+
+
+def _driver_memory(env=os.environ, phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for ``get_spark``: ``TSN_DRIVER_MEMORY`` when
+    set, else the host-sized default."""
+    override = env.get("TSN_DRIVER_MEMORY")
+    if override:
+        return override
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return _default_driver_memory(phys_bytes)
 
 
 def _jvm_fault_opts() -> str:
@@ -89,7 +122,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("TSN_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # signature tables (1 KiB/row) up to ~250k rows should broadcast in
         # the prefilter joins — at 64 MB the multi-hundred-MB candidate

@@ -10,6 +10,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from text_similarity_node_spark.session import get_spark
 
-    s = get_spark(app_name="tsn-tests", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark(app_name="tsn-tests", cores=cores, shuffle_partitions=8)
     yield s
     s.stop()

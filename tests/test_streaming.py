@@ -187,6 +187,12 @@ def test_over_cap_candidates_take_semi_join_path(spark, dirs, monkeypatch):
     pairs = {(r.id1, r.id2) for r in dedup.verified_pairs().collect()}
     for i in range(6):
         assert (f"h{i}", f"n{i}") in pairs, f"missing cross-batch pair {i}"
+    from text_similarity_node_spark.streaming.ledger import read_batch_metrics
+
+    last = max(
+        read_batch_metrics(spark, state).collect(), key=lambda r: r.batch_id
+    )
+    assert last.docs_read == "semi_join" and last.n_cand_ids > 2
 
 
 def test_streaming_cluster_labels_match_batch_cc(spark, dirs):
@@ -404,3 +410,161 @@ def test_fp_cap_mid_stream_is_observable(spark, dirs):
     assert not any(r.fp in hot_set for r in added), (
         "known-hot fingerprint re-entered the store"
     )
+
+
+def _boiler_docs(lo, hi, boiler, seed=3):
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{v}" for v in range(300)]
+    return [
+        (f"d{i:03d}", " ".join(rng.choice(vocab) for _ in range(30)) + " " + boiler)
+        for i in range(lo, hi)
+    ]
+
+
+def _hot_rows(spark, sink):
+    from text_similarity_node_spark.streaming.incremental import STORE_SCHEMAS
+
+    return sorted(
+        tuple(r)
+        for r in spark.read.schema(STORE_SCHEMAS["hot_fps_store"])
+        .option("recursiveFileLookup", "true")
+        .parquet(sink.hot_fps_path)
+        .collect()
+    )
+
+
+def test_replay_does_not_double_count_fp_cap(spark, dirs):
+    """A batch replayed under its own batch_id (crash after the store
+    appends) finds its own fingerprint rows in fps_store.  They are not
+    history: with a cap between the true count and twice it, the replay
+    must not mark the shared fingerprints hot, and its pairs stay."""
+    src, state, ckpt = dirs
+    cfg = PipelineConfig(
+        verify_threshold=0.5,
+        exact_dedup_first=False,
+        simhash_enabled=False,
+        substring_enabled=True,
+        substring_min_len=16,
+        fingerprint_cap=6,  # 4 docs share the boilerplate; a replay sees 8
+        run_id="stream_replay_cap",
+    )
+    sink = IncrementalDedup(spark, cfg, state)
+    boiler = (
+        "this exact boilerplate sentence appears in every single doc and "
+        "it runs long enough to dominate each transcript's grams"
+    )
+    batch = spark.createDataFrame(_boiler_docs(0, 4, boiler), SCHEMA)
+    sink.process_batch(batch, 0)
+    pairs_first = {(r.id1, r.id2) for r in sink.verified_pairs().collect()}
+    assert pairs_first, "the boilerplate docs produced no pairs to lose"
+    assert _hot_rows(spark, sink) == []
+    sink.process_batch(batch, 0)  # replay
+    assert _hot_rows(spark, sink) == [], "replay marked its own fps hot"
+    pairs_replayed = {(r.id1, r.id2) for r in sink.verified_pairs().collect()}
+    assert pairs_replayed == pairs_first
+
+
+def test_replay_keeps_hot_record(spark, dirs):
+    """Replaying the batch whose fingerprints crossed the cap must
+    rewrite the same hot_fps_store record: the batch's own earlier record
+    is not a known-hot fingerprint from history."""
+    src, state, ckpt = dirs
+    cfg = PipelineConfig(
+        verify_threshold=0.99,
+        exact_dedup_first=False,
+        simhash_enabled=False,
+        substring_enabled=True,
+        substring_min_len=16,
+        fingerprint_cap=6,
+        run_id="stream_replay_hot",
+    )
+    sink = IncrementalDedup(spark, cfg, state)
+    boiler = "this exact boilerplate sentence appears in every single doc"
+    sink.process_batch(
+        spark.createDataFrame(_boiler_docs(0, 5, boiler), SCHEMA), 0
+    )
+    batch1 = spark.createDataFrame(_boiler_docs(5, 10, boiler), SCHEMA)
+    sink.process_batch(batch1, 1)
+    hot_first = _hot_rows(spark, sink)
+    assert hot_first, "the cap did not fire at batch 1"
+    sink.process_batch(batch1, 1)  # replay
+    assert _hot_rows(spark, sink) == hot_first
+
+
+@pytest.fixture(scope="module")
+def two_batch_sink(spark):
+    """All tiers on, two batches of four input partitions each, the
+    second holding near-dups of the first."""
+    import random
+
+    cfg = PipelineConfig(
+        verify_threshold=0.8,
+        exact_dedup_first=False,
+        simhash_enabled=True,
+        substring_enabled=True,
+        fingerprint_cap=10**9,
+        run_id="stream_layout",
+    )
+    rng = random.Random(11)
+    vocab = [f"tok{v}" for v in range(500)]
+    base = [" ".join(rng.choice(vocab) for _ in range(40)) for _ in range(40)]
+    with tempfile.TemporaryDirectory() as d:
+        sink = IncrementalDedup(spark, cfg, os.path.join(d, "state"))
+        for b in range(2):
+            rows = [(f"b{b}_{i:03d}", t + f" v{b}") for i, t in enumerate(base)]
+            sink.process_batch(
+                spark.createDataFrame(rows, SCHEMA).repartition(4), b
+            )
+        yield spark, sink
+
+
+def test_band_store_one_file_per_partition_per_batch(two_batch_sink):
+    import glob
+
+    _, sink = two_batch_sink
+    parts = glob.glob(os.path.join(sink.bands_path, "bh_part=*"))
+    assert parts
+    for p in parts:
+        assert len(glob.glob(os.path.join(p, "*.parquet"))) <= 2, p
+
+
+def test_pinned_store_schemas_match_written_files(two_batch_sink):
+    """Each schema the sink reads a store with equals the one Spark
+    infers from the files it wrote: a column added to a writer without
+    the matching reader change fails here."""
+    from text_similarity_node_spark.streaming.incremental import STORE_SCHEMAS
+    from text_similarity_node_spark.streaming.labels import labels_schema
+    from text_similarity_node_spark.streaming.ledger import _METRICS_DDL
+
+    spark, sink = two_batch_sink
+    pinned = {
+        store: STORE_SCHEMAS[store]
+        for store in (
+            "bands_store", "docs_store", "sims_store", "fps_store",
+            "verified_pairs",
+        )
+    }
+    pinned["cluster_labels"] = labels_schema()
+    pinned["batch_metrics"] = _METRICS_DDL
+    for store, ddl in pinned.items():
+        path = os.path.join(sink.state_dir, store)
+        inferred = spark.read.parquet(path).schema
+        assert spark.read.schema(ddl).parquet(path).schema == inferred, store
+    hot = spark.read.option("recursiveFileLookup", "true")
+    assert (
+        hot.schema(STORE_SCHEMAS["hot_fps_store"]).parquet(sink.hot_fps_path).schema
+        == hot.parquet(sink.hot_fps_path).schema
+    )
+
+
+def test_batch_metrics_record_candidate_fetch(two_batch_sink):
+    from text_similarity_node_spark.streaming.ledger import read_batch_metrics
+
+    spark, sink = two_batch_sink
+    m = {r.batch_id: r for r in read_batch_metrics(spark, sink.state_dir).collect()}
+    # batch 0 has no docs store to read; batch 1's near-dups of batch 0
+    # fetch their partners through the isin pushdown
+    assert m[0].docs_read == "none"
+    assert m[1].docs_read == "isin" and m[1].n_cand_ids >= 80

@@ -14,7 +14,10 @@ silence transcripts) explode quadratically.  Strategy here:
    pair space is covered by joining salt-block pairs (i <= j), replicating
    each row g times on the build side only — bounded fan-out, no single
    reducer sees the whole hot key;
-4. cold keys take the plain equi-join (AQE handles residual skew).
+4. cold keys take the same join with one salt bucket -- exactly the plain
+   equi-join.  Their fan-out is bounded by ``hot_band_threshold``; no
+   skew handling is left to AQE, which the pipeline may pin off
+   (``PipelineConfig.adaptive_enabled``).
 
 Pairs are deduped on (id1 < id2) and across bands with dropDuplicates —
 at most one row per candidate pair leaves this stage.

@@ -16,13 +16,18 @@ Design decisions that carry the 100 TB story:
   tests/test_resume.py).
 * **Metrics + lineage ledgers.**  Each stage appends (run_id, stage,
   config_hash, rows_in, rows_out, dropped, detail) — caps are never silent.
-* **Skew handling** lives in operators/lsh.py (salted hot bands,
-  capped-with-metrics degenerate bands) and AQE is on for residual skew.
-* **Verification is JVM-side**: exact multiset-Jaccard over count maps via
-  map_zip_with (reference NGRAM semantics, token_based.cpp:30-43); the
-  candidate union is deduped before verification so each pair is verified
-  once (the distributed analogue of the reference's result cache,
-  similarity_engine.cpp:486-558).
+* **Skew handling** lives in operators/lsh.py: one salted triangle join
+  (hot bands salted, degenerate bands capped with metrics), so every join
+  carries its own skew disposition.  AQE is pinned per
+  ``cfg.adaptive_enabled`` for the run (``None`` keeps the session's
+  setting); nothing here relies on it.
+* **Verification is a sorted-array merge**: the candidate union is deduped
+  and passed through the multiset-sound MinHash prefilter, then each pair's
+  presorted xxhash64 gram arrays are merged by an Arrow-batched numpy UDF
+  into the exact multiset Jaccard (reference NGRAM semantics,
+  token_based.cpp:30-43; operators/verify.verify_pairs_multiset_jaccard_arrays).
+  Each pair is verified once (the distributed analogue of the reference's
+  result cache, similarity_engine.cpp:486-558).
 """
 
 from __future__ import annotations
@@ -37,6 +42,7 @@ from ..config import PipelineConfig, Preprocessing
 from ..functions import columns as C
 from ..operators import lsh, minhash, simhash, suffix, verify
 from ..operators.components import connected_components, connected_components_twostar
+from ..session import empty_frame
 from ..sources.catalog import ParquetCatalog
 
 
@@ -383,9 +389,7 @@ class NearDupPipeline:
                 "simhash_candidates", build_simhash_pairs, signatures
             )
         else:
-            sim_pairs = spark.createDataFrame(
-                [], "id1 string, id2 string, source string"
-            )
+            sim_pairs = empty_frame(spark, "id1 string, id2 string, source string")
 
         # Stage 4: containment (winnowed substring) candidates.
         if cfg.substring_enabled:
@@ -411,7 +415,7 @@ class NearDupPipeline:
 
             sub_pairs = self._stage("containment_candidates", build_containment_pairs, rep_ids)
         else:
-            sub_pairs = spark.createDataFrame([], "id1 string, id2 string, source string")
+            sub_pairs = empty_frame(spark, "id1 string, id2 string, source string")
 
         # Stage 5: verify — dedupe the union, prefilter, join transcripts
         # back, exact multiset-Jaccard JVM-side.  Each pair verified once.

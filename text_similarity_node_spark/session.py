@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 _DRIVER_MEMORY_CAP_MIB = 24 * 1024
@@ -172,3 +172,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty DataFrame of ``schema`` (DDL) backed by ``emptyRDD()``.
+    Its scan has no partitions, so evaluating it starts no Python task.
+    A frame from ``createDataFrame([], schema)`` is a parallelized Python
+    RDD whose every evaluation does: a count of it took 0.3-0.5 s on
+    4 vCPUs (3.5 s cold, inside a join), against 0.07 s for this one."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)

@@ -5,11 +5,11 @@ its src/), so streaming here is *engine capability*, not parity: new clips
 arrive as files in a directory (stand-in for Kafka at scale), and each
 micro-batch is deduplicated against everything seen so far:
 
-    new batch ─► signatures ─► bands ──┐
-            └─► simhash ─► blocks ─────┼─ history joins ─► candidates ─► verify
-            └─► winnow  ─► fingerprints┘                       │
-    band/sims/fps stores (history) ────┘                       │
-    docs store (gram arrays) ──────────────────────────────────┘
+    new batch ─► one feature pass ─► bands ──┐
+                 (checkpointed)   ─► simhash ┼─ history joins ─► candidates ─► verify
+                                  ─► fps ────┘                   (checkpointed)  │
+    band/sims/fps stores (history) ──────────┘                                   │
+    docs store (gram arrays) ────────────────────────────────────────────────────┘
 
 All three batch-pipeline candidate tiers (minhash LSH bands, simhash
 pigeonhole blocks, winnowing containment fingerprints) run incrementally:
@@ -23,6 +23,22 @@ hot_fps_store — divergence from batch is observable, never silent.
 State lives in the checkpoint warehouse as append-only parquet stores —
 the streaming analogue of the batch pipeline's checkpoint tables, giving
 exactly-once semantics through foreachBatch + idempotent batch-id dirs.
+
+Per-batch job shape — a micro-batch's cost is mostly fixed per-job
+overhead, so the sink keeps the job count small:
+
+* **One feature pass.**  The batch is read and tokenized once; the
+  MinHash, SimHash and winnowing-fingerprint pandas UDFs and the sorted
+  xxhash64 gram arrays are evaluated in one projection (one Python pass)
+  and materialized once with ``localCheckpoint``.  The tiers' new-side
+  frames (bands, docs, sims, fps) are JVM-side projections of it.
+* **Checkpointed candidates.**  The deduplicated union of every tier's
+  candidates is materialized once; verification, the candidate-id fetch
+  and the metrics count read it instead of re-running the history joins.
+* **Schema-pinned reads.**  Every store is read with its fixed schema
+  (``STORE_SCHEMAS``), so no read launches a footer-inference job.
+* **One band file per partition per batch.**  The band rows are shuffled
+  on ``bh_part`` before the partitioned append.
 
 Why batch cost does NOT grow linearly with history:
 
@@ -40,11 +56,11 @@ Why batch cost does NOT grow linearly with history:
   candidate pairs are fetched, via an ``isin`` predicate pushed into the
   parquet scan (files are sorted by clip_id, so row-group stats skip
   non-matching groups).  Its read cost is O(candidates), not O(history).
+  Above ``_ISIN_PUSHDOWN_CAP`` ids the fetch is a left-semi join instead;
+  the batch's metrics row records the id count and the path taken.
 * Verification is the batch path's array-merge shape
   (operators/verify.verify_pairs_multiset_jaccard_arrays): per-pair numpy
-  merge over presorted xxhash64 gram arrays — NOT the interpreted
-  map_zip_with expression, which the batch pipeline measured ~100x slower
-  (operators/verify.py header).
+  merge over presorted xxhash64 gram arrays.
 
 tests/test_streaming.py asserts pair-level correctness vs the batch
 pipeline AND that per-batch wall time stays flat as history grows.
@@ -68,6 +84,19 @@ _BAND_PARTITIONS = 16
 # above this many candidate ids, skip the isin pushdown (a huge IN list
 # costs more to evaluate than it saves) and fall back to a shuffle join
 _ISIN_PUSHDOWN_CAP = 100_000
+
+# Fixed schema of each store, keyed by its directory under the state dir
+# (partition columns last).  Clip ids are strings, as in the batch
+# pipeline.  tests/test_streaming.py checks each against the schema Spark
+# infers from the files the sink writes.
+STORE_SCHEMAS = {
+    "bands_store": "clip_id string, band_id int, band_hash bigint, bh_part int",
+    "docs_store": "clip_id string, gram_hashes array<bigint>, n_grams int",
+    "sims_store": "clip_id string, simhash bigint",
+    "fps_store": "fp bigint, clip_id string",
+    "hot_fps_store": "fp bigint, n_docs bigint, batch_id int",
+    "verified_pairs": "id1 string, id2 string, jaccard double, batch_id int",
+}
 
 
 class IncrementalDedup:
@@ -94,6 +123,54 @@ class IncrementalDedup:
             f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
         )
 
+    def _read(self, store: str) -> DataFrame:
+        """One of the sink's stores (a dir under state_dir), read with its
+        fixed schema."""
+        return self.spark.read.schema(STORE_SCHEMAS[store]).parquet(
+            os.path.join(self.state_dir, store)
+        )
+
+    def _features(self, batch_df: DataFrame) -> DataFrame:
+        """The batch's per-doc features from one read and one tokenization:
+        MinHash signature, sorted xxhash64 gram array and gram count, plus
+        the SimHash and the distinct winnowing fingerprints when their
+        tiers are on.  The pandas UDFs sit in one projection, so Spark
+        evaluates them in one Python pass; the result is materialized once
+        and every per-tier frame is a JVM-side projection of it."""
+        cfg = self.cfg
+        docs = batch_df.select("clip_id", "transcript").withColumn(
+            "tokens", _tokens_col(cfg)
+        )
+        feats = minhash.with_minhash(docs, "tokens", cfg)
+        if cfg.simhash_enabled:
+            from ..operators.simhash import with_simhash
+
+            feats = with_simhash(feats, "tokens")
+        if cfg.substring_enabled:
+            from ..operators.suffix import fingerprint_udf
+
+            # window=16 mirrors containment_candidates' default — the
+            # winnowing guarantee is shared substrings >= min_len + 15
+            feats = feats.withColumn(
+                "fps",
+                F.array_distinct(
+                    fingerprint_udf(cfg.substring_min_len, 16)(
+                        F.col("transcript")
+                    )
+                ),
+            )
+        return (
+            feats.withColumn(
+                "gram_hashes",
+                F.sort_array(
+                    F.transform(F.col("tokens"), lambda t: F.xxhash64(t))
+                ),
+            )
+            .withColumn("n_grams", F.size("tokens"))
+            .drop("transcript", "tokens")
+            .localCheckpoint()
+        )
+
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         import time
 
@@ -101,20 +178,12 @@ class IncrementalDedup:
 
         t0 = time.time()
         cfg = self.cfg
-        docs = batch_df.select("clip_id", "transcript").withColumn(
-            "tokens", _tokens_col(cfg)
-        )
-        sig = minhash.with_minhash(docs, "tokens", cfg).select("clip_id", "minhash")
-        new_bands = minhash.explode_bands(sig, "clip_id", "minhash", cfg).cache()
+        bid = int(batch_id)
+        feats = self._features(batch_df)
+        new_bands = minhash.explode_bands(feats, "clip_id", "minhash", cfg)
         # per-doc sorted gram-hash arrays + totals: the array-merge verify's
         # input shape, precomputed once per doc at ingest time
-        new_docs = docs.select(
-            "clip_id",
-            F.sort_array(
-                F.transform(F.col("tokens"), lambda t: F.xxhash64(t))
-            ).alias("gram_hashes"),
-            F.size("tokens").alias("n_grams"),
-        ).cache()
+        new_docs = feats.select("clip_id", "gram_hashes", "n_grams")
 
         # candidates: new-vs-new plus new-vs-history.  Both joins broadcast
         # the new side, so history is streamed, never shuffled.
@@ -128,7 +197,7 @@ class IncrementalDedup:
             F.col("a.clip_id").alias("id1"), F.col("b.clip_id").alias("id2")
         )
         if self._store_exists(self.bands_path):
-            hist = self.spark.read.parquet(self.bands_path).alias("h")
+            hist = self._read("bands_store").alias("h")
             nh = hist.join(
                 F.broadcast(new_bands.alias("n")),
                 (F.col("n.band_id") == F.col("h.band_id"))
@@ -161,38 +230,24 @@ class IncrementalDedup:
             from ..operators import simhash as sh
 
             radius = cfg.hamming_radius
-            new_sims = sh.with_simhash(docs, "tokens").select(
-                "clip_id", "simhash"
-            ).cache()
+            new_sims = feats.select("clip_id", "simhash")
 
-            def _exact_blocks(df: DataFrame) -> DataFrame:
+            def _blocks(df: DataFrame, blocks_fn) -> DataFrame:
                 return df.select(
                     "clip_id",
                     "simhash",
-                    F.explode(
-                        sh.hamming_blocks(F.col("simhash"), radius)
-                    ).alias("blk"),
+                    F.explode(blocks_fn(F.col("simhash"), radius)).alias("blk"),
                 ).select(
                     "clip_id", "simhash",
                     F.col("blk.block_id").alias("block_id"),
                     F.col("blk.block_value").alias("block_value"),
                 )
 
-            exp_new = new_sims.select(
-                "clip_id",
-                "simhash",
-                F.explode(
-                    sh.hamming_blocks_expanded(F.col("simhash"), radius)
-                ).alias("blk"),
-            ).select(
-                "clip_id", "simhash",
-                F.col("blk.block_id").alias("block_id"),
-                F.col("blk.block_value").alias("block_value"),
-            )
-            exact_all = _exact_blocks(new_sims)
+            exp_new = _blocks(new_sims, sh.hamming_blocks_expanded)
+            exact_all = _blocks(new_sims, sh.hamming_blocks)
             if self._store_exists(self.sims_path):
                 exact_all = exact_all.unionByName(
-                    _exact_blocks(self.spark.read.parquet(self.sims_path))
+                    _blocks(self._read("sims_store"), sh.hamming_blocks)
                 )
             sim_cand = (
                 exact_all.alias("e")
@@ -232,27 +287,24 @@ class IncrementalDedup:
         # emitted.  Cap-free runs are therefore exactly batch-equal; runs
         # where the cap fires diverge observably through hot_fps_store
         # (tests/test_streaming.py::test_fp_cap_mid_stream_is_observable).
-        new_fps = None
+        #
+        # Replay (same batch_id after a crash past the store appends):
+        # this batch's own rows in fps_store and its own hot_fps_store
+        # record are not history, so both are excluded — the replay
+        # counts, caps and pairs exactly as the first attempt did.
         fps_use = None
         newly_hot = None
         if cfg.substring_enabled:
-            from ..operators.suffix import fingerprint_udf
-
-            # window=16 mirrors containment_candidates' default — the
-            # winnowing guarantee is shared substrings >= min_len + 15
-            new_fps = docs.select(
-                "clip_id",
-                F.explode(
-                    fingerprint_udf(cfg.substring_min_len, 16)(
-                        F.col("transcript")
-                    )
-                ).alias("fp"),
-            ).distinct().cache()
-            fps_new = new_fps
+            fps_new = feats.select("clip_id", F.explode("fps").alias("fp"))
             if self._store_exists(self.hot_fps_path):
-                known_hot = self.spark.read.option(
-                    "recursiveFileLookup", "true"
-                ).parquet(self.hot_fps_path).select("fp").distinct()
+                known_hot = (
+                    self.spark.read.schema(STORE_SCHEMAS["hot_fps_store"])
+                    .option("recursiveFileLookup", "true")
+                    .parquet(self.hot_fps_path)
+                    .filter(F.col("batch_id") != bid)
+                    .select("fp")
+                    .distinct()
+                )
                 fps_new = fps_new.join(
                     F.broadcast(known_hot), "fp", "left_anti"
                 )
@@ -268,9 +320,13 @@ class IncrementalDedup:
                 # post-write metrics count can never re-list the store
                 # and see this batch's own rows as history
                 hist_fps_hit = (
-                    self.spark.read.parquet(self.fps_path)
+                    self._read("fps_store")
                     .join(
                         F.broadcast(fps_new.select("fp").distinct()), "fp"
+                    )
+                    .join(
+                        F.broadcast(feats.select("clip_id")), "clip_id",
+                        "left_anti",
                     )
                     .dropDuplicates(["fp", "clip_id"])
                     .localCheckpoint()
@@ -294,7 +350,7 @@ class IncrementalDedup:
             ).localCheckpoint()
             fps_use = fps_new.join(
                 F.broadcast(newly_hot.select("fp")), "fp", "left_anti"
-            ).cache()
+            )
             a, b = fps_use.alias("a"), fps_use.alias("b")
             cont_nn = a.join(
                 F.broadcast(b),
@@ -326,32 +382,36 @@ class IncrementalDedup:
         cand = tiers[0]
         for t in tiers[1:]:
             cand = cand.unionByName(t)
-        cand = cand.dropDuplicates(["id1", "id2"]).cache()
+        cand = cand.dropDuplicates(["id1", "id2"]).localCheckpoint()
 
         # gram arrays for exactly the docs the candidates touch: new-batch
-        # docs from memory; historical docs via a pushed-down isin scan
-        # (store files are sorted by clip_id -> row-group skipping), so the
-        # docs-store read is O(candidates), not O(history).  The id set is
-        # counted distributively FIRST and only collected to the driver when
-        # it fits under _ISIN_PUSHDOWN_CAP — a hot-band batch against deep
-        # history can produce millions of candidate ids, and those take the
-        # left-semi join path without ever touching the driver.
-        cand_ids_df = (
-            cand.select(F.explode(F.array("id1", "id2")).alias("clip_id"))
-            .distinct()
-            .cache()
-        )
-        n_cand_ids = cand_ids_df.count()
-        stores = [new_docs]
-        if self._store_exists(self.docs_path) and n_cand_ids:
-            hist_docs = self.spark.read.parquet(self.docs_path)
-            if n_cand_ids <= _ISIN_PUSHDOWN_CAP:
-                cand_ids = [r[0] for r in cand_ids_df.collect()]
-                hist_docs = hist_docs.filter(F.col("clip_id").isin(*cand_ids))
-            else:
+        # docs from the feature checkpoint; historical docs via a
+        # pushed-down isin scan (store files are sorted by clip_id ->
+        # row-group skipping), so the docs-store read is O(candidates), not
+        # O(history).  One bounded collect fetches the id set; when it
+        # overflows _ISIN_PUSHDOWN_CAP — a hot-band batch against deep
+        # history can produce millions of candidate ids — the ids are
+        # counted distributively and the store is read through a left-semi
+        # join, so the full set never reaches the driver.
+        cand_ids_df = cand.select(
+            F.explode(F.array("id1", "id2")).alias("clip_id")
+        ).distinct()
+        cand_ids = [
+            r[0] for r in cand_ids_df.limit(_ISIN_PUSHDOWN_CAP + 1).collect()
+        ]
+        over_cap = len(cand_ids) > _ISIN_PUSHDOWN_CAP
+        n_cand_ids = cand_ids_df.count() if over_cap else len(cand_ids)
+        all_docs = new_docs
+        docs_read = "none"
+        if n_cand_ids and self._store_exists(self.docs_path):
+            hist_docs = self._read("docs_store")
+            if over_cap:
+                docs_read = "semi_join"
                 hist_docs = hist_docs.join(cand_ids_df, "clip_id", "left_semi")
-            stores.append(hist_docs)
-        all_docs = stores[0] if len(stores) == 1 else stores[0].unionByName(stores[1])
+            else:
+                docs_read = "isin"
+                hist_docs = hist_docs.filter(F.col("clip_id").isin(*cand_ids))
+            all_docs = all_docs.unionByName(hist_docs)
         # dedupe (a replayed batch may have written its docs already)
         all_docs = all_docs.dropDuplicates(["clip_id"])
 
@@ -367,18 +427,18 @@ class IncrementalDedup:
             cfg.verify_threshold,
             presorted_hashes=True,
             total_col="n_grams",
-        ).select(
-            "id1", "id2", "jaccard", F.lit(int(batch_id)).alias("batch_id")
-        )
+        ).select("id1", "id2", "jaccard", F.lit(bid).alias("batch_id"))
         # idempotence: one output dir per batch id, overwritten on replay
-        verified.write.mode("overwrite").parquet(
-            os.path.join(self.pairs_path, f"batch_id={int(batch_id)}")
-        )
+        pairs_dir = os.path.join(self.pairs_path, f"batch_id={bid}")
+        verified.write.mode("overwrite").parquet(pairs_dir)
         self._update_labels(batch_id)
+        # one shuffle on bh_part: each band partition gets one file per
+        # batch instead of one per input partition
         (
             new_bands.withColumn(
                 "bh_part", F.pmod(F.col("band_hash"), F.lit(_BAND_PARTITIONS))
             )
+            .repartition("bh_part")
             .sortWithinPartitions("band_hash")
             .write.mode("append")
             .partitionBy("bh_part")
@@ -398,29 +458,22 @@ class IncrementalDedup:
             )
             # batch-keyed, overwritten on replay — idempotent, and the
             # count-at-detection makes every cap firing observable
-            newly_hot.withColumn(
-                "batch_id", F.lit(int(batch_id))
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.hot_fps_path, f"batch_id={int(batch_id)}")
-            )
+            newly_hot.withColumn("batch_id", F.lit(bid)).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(self.hot_fps_path, f"batch_id={bid}"))
         # per-batch metrics row (batch-id-keyed file: replay overwrites);
-        # counts come from cached frames / the just-written tiny pair dir
+        # counts come from the checkpoints / the just-written tiny pair dir
         append_batch_metrics(
             self.state_dir, "text", batch_id,
-            rows_in=new_docs.count(),
+            rows_in=feats.count(),
             n_candidates=cand.count(),
-            n_pairs=self.spark.read.parquet(
-                os.path.join(self.pairs_path, f"batch_id={int(batch_id)}")
-            ).count(),
+            n_pairs=self.spark.read.schema(STORE_SCHEMAS["verified_pairs"])
+            .parquet(pairs_dir)
+            .count(),
             started_at=t0,
+            n_cand_ids=n_cand_ids,
+            docs_read=docs_read,
         )
-        new_bands.unpersist()
-        new_docs.unpersist()
-        cand.unpersist()
-        cand_ids_df.unpersist()
-        for df in (new_sims, new_fps, fps_use):
-            if df is not None:
-                df.unpersist()
 
     def compact_stores(self, target_files_per_partition: int = 1) -> None:
         """Rewrite the band and doc stores to bounded file counts: each
@@ -435,14 +488,14 @@ class IncrementalDedup:
         import shutil
         import uuid
 
-        spark = self.spark
-        for path, part_cols, sort_col in (
-            (self.bands_path, ["bh_part"], "band_hash"),
-            (self.docs_path, [], "clip_id"),
+        for store, part_cols, sort_col in (
+            ("bands_store", ["bh_part"], "band_hash"),
+            ("docs_store", [], "clip_id"),
         ):
+            path = os.path.join(self.state_dir, store)
             if not self._store_exists(path):
                 continue
-            df = spark.read.parquet(path)
+            df = self._read(store)
             tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
             writer = (
                 df.repartition(target_files_per_partition, *part_cols)
@@ -469,7 +522,7 @@ class IncrementalDedup:
         )
 
     def verified_pairs(self) -> DataFrame:
-        return self.spark.read.parquet(self.pairs_path)
+        return self._read("verified_pairs")
 
     # --- incremental cluster-label maintenance ---------------------------
     # (shared machinery + scale/replay rationale: streaming/labels.py)

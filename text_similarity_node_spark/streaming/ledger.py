@@ -4,7 +4,10 @@ The batch pipeline writes per-stage metrics + lineage rows to its catalog
 (plans/pipeline.py); the streaming sinks get the same observability here:
 one row per (micro-batch, sink) with rows-in / candidate / verified-pair
 counts and wall time, written driver-side via pyarrow (a distributed write
-would cost a job-submission round-trip per batch for a single row).
+would cost a job-submission round-trip per batch for a single row).  The
+text sink also records how it fetched historical docs: the number of
+distinct candidate ids (``n_cand_ids``) and the read path (``docs_read``:
+``none``, ``isin`` or ``semi_join``); both are null for the other sinks.
 
 Idempotence matches the pair stores: the file name is keyed by batch_id,
 so a replayed batch OVERWRITES its own metrics row instead of appending a
@@ -25,6 +28,8 @@ def append_batch_metrics(
     n_candidates: int,
     n_pairs: int,
     started_at: float,
+    n_cand_ids: int | None = None,
+    docs_read: str | None = None,
 ) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -39,6 +44,8 @@ def append_batch_metrics(
             ("n_candidates", pa.int64()),
             ("n_pairs", pa.int64()),
             ("elapsed_s", pa.float64()),
+            ("n_cand_ids", pa.int64()),
+            ("docs_read", pa.string()),
         ]
     )
     tbl = pa.Table.from_pylist(
@@ -50,6 +57,8 @@ def append_batch_metrics(
                 "n_candidates": int(n_candidates),
                 "n_pairs": int(n_pairs),
                 "elapsed_s": float(time.time() - started_at),
+                "n_cand_ids": n_cand_ids,
+                "docs_read": docs_read,
             }
         ],
         schema=schema,
@@ -57,5 +66,15 @@ def append_batch_metrics(
     pq.write_table(tbl, os.path.join(d, f"metrics-{sink}-b{int(batch_id)}.parquet"))
 
 
+# the pyarrow schema above as Spark DDL: the read is schema-pinned, so
+# rows written before the last two columns existed read them as null
+_METRICS_DDL = (
+    "sink string, batch_id bigint, rows_in bigint, n_candidates bigint, "
+    "n_pairs bigint, elapsed_s double, n_cand_ids bigint, docs_read string"
+)
+
+
 def read_batch_metrics(spark, state_dir: str):
-    return spark.read.parquet(os.path.join(state_dir, "batch_metrics"))
+    return spark.read.schema(_METRICS_DDL).parquet(
+        os.path.join(state_dir, "batch_metrics")
+    )

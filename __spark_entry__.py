@@ -701,8 +701,6 @@ def q16_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the per-pair bound M/(T1+T2-M), margin covers estimator variance)
     # — shrinking the verify input is the dominant win at scale.
     pairs = minhash.prefilter_candidates(pairs, sig, cfg, id_col="doc_id")
-    # array-merge verify (exact-equal to the inverted-index shape, proven
-    # by direct comparison; see operators/verify.py for when each wins)
     verified = verify_pairs_multiset_jaccard_arrays(
         pairs, docs, "doc_id", "tokens", cfg.verify_threshold
     )
@@ -726,9 +724,10 @@ def q17_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", C.char_ngrams(F.col("text"), 3).alias("tokens")
     )
     sk = simhash.with_simhash(docs, "tokens")
-    return simhash.simhash_candidates(
+    pairs, _dispositions = simhash.simhash_candidates(
         sk.select("doc_id", "simhash"), cfg, id_col="doc_id"
-    ).select(
+    )
+    return pairs.select(
         F.col("id1").alias("doc_id1"),
         F.col("id2").alias("doc_id2"),
         F.col("hamming"),
@@ -749,7 +748,7 @@ def q18_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text_similarity_node_spark.operators.suffix import containment_candidates
 
     corpus = _dedup_corpus(spark, sf_dir)
-    cands = containment_candidates(
+    cands, _dispositions = containment_candidates(
         corpus, "doc_id", "text", min_len=32, window=16, fingerprint_cap=10**9
     )
     t1 = corpus.select(F.col("doc_id").alias("id1"), F.col("text").alias("t1"))
@@ -1400,9 +1399,10 @@ def q31_simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id1", "id2").persist()
     cfg = PipelineConfig(hamming_radius=10)
     sk = simhash.with_simhash(docs, "tokens")
-    cand = simhash.simhash_candidates(
+    cand, _dispositions = simhash.simhash_candidates(
         sk.select("doc_id", "simhash"), cfg, id_col="doc_id"
-    ).select("id1", "id2")
+    )
+    cand = cand.select("id1", "id2")
     found = truth.join(cand, ["id1", "id2"], "left_semi")
     return truth.agg(F.count(F.lit(1)).alias("n_truth")).crossJoin(
         found.agg(F.count(F.lit(1)).alias("_nf"))
@@ -3469,7 +3469,7 @@ def q63_lcs_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     corpus = base.unionByName(copies)
-    cands = containment_candidates(
+    cands, _dispositions = containment_candidates(
         corpus, "doc_id", "text", min_len=16, window=8
     )
     out = lcs_verify(cands, corpus, "doc_id", "text", min_len=30)

@@ -151,6 +151,27 @@ def test_metrics_ledger_written(pipeline_result):
     assert any(m.stage == "lsh_band_audit" for m in metrics)
 
 
+def test_simhash_band_cap_reaches_ledger(spark):
+    """Six clips share one SimHash, so each of its four block keys holds
+    six rows; with band_cap=3 the SimHash tier drops those keys and the
+    drop reaches the ledger as a simhash_band_audit row."""
+    rows = [(f"d{i}", "one transcript shared by every clip here") for i in range(6)]
+    rows += [(f"u{i}", f"unrelated words number {i} for a cold key") for i in range(4)]
+    clips = spark.createDataFrame(rows, "clip_id string, transcript string")
+    cfg = PipelineConfig(
+        exact_dedup_first=False, substring_enabled=False, band_cap=3,
+        per_partition_metrics=False, run_id="simhash_cap",
+    )
+    with tempfile.TemporaryDirectory() as wh:
+        metrics = {
+            m.stage: m
+            for m in NearDupPipeline(spark, cfg, wh).run(clips).metrics.collect()
+        }
+    audit = metrics["simhash_band_audit"]
+    assert audit.dropped == 6 * 4, audit
+    assert audit.detail.startswith("dropped_keys=4,"), audit
+
+
 def test_twostar_cc_same_clusters(spark, pipeline_result):
     """cc_algorithm='twostar' is a drop-in: identical cluster assignments
     to the default hash-min on the same planted corpus."""

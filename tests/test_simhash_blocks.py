@@ -54,9 +54,10 @@ def corpus():
 def test_candidates_exact_vs_bruteforce(spark, corpus, radius):
     df = _mk_df(spark, corpus)
     cfg = PipelineConfig(hamming_radius=radius)
+    pairs, _ = simhash.simhash_candidates(df, cfg)
     got = {
         (r.id1, r.id2)
-        for r in simhash.simhash_candidates(df, cfg).collect()
+        for r in pairs.collect()
     }
     assert got == _brute_pairs(corpus, radius)
 
@@ -76,9 +77,10 @@ def test_hot_key_salted_still_exact(spark):
     vals.update({f"c{i:03d}": random.Random(i).getrandbits(64) for i in range(20)})
     df = _mk_df(spark, vals)
     cfg = PipelineConfig(hamming_radius=3, hot_band_threshold=10, salt_buckets=4)
+    pairs, _ = simhash.simhash_candidates(df, cfg)
     got = {
         (r.id1, r.id2)
-        for r in simhash.simhash_candidates(df, cfg).collect()
+        for r in pairs.collect()
     }
     assert got == _brute_pairs(vals, 3)
     assert len([p for p in got if p[0].startswith("h")]) >= 60 * 59 // 2
@@ -92,9 +94,10 @@ def test_hot_key_cap_drops_with_bounded_fanout(spark):
     vals.update(near)
     df = _mk_df(spark, vals)
     cfg = PipelineConfig(hamming_radius=3, hot_band_threshold=5, band_cap=30)
+    pairs, _ = simhash.simhash_candidates(df, cfg)
     got = {
         (r.id1, r.id2)
-        for r in simhash.simhash_candidates(df, cfg).collect()
+        for r in pairs.collect()
     }
     assert ("a1", "a2") in got
     assert not any(p[0].startswith("h") and p[1].startswith("h") for p in got)

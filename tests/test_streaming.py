@@ -140,9 +140,12 @@ def test_compaction_preserves_results_and_bounds_files(spark, dirs):
         return len(glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True))
 
     before = n_files(dedup.bands_path) + n_files(dedup.docs_path)
+    n_sims, n_fps = n_files(dedup.sims_path), n_files(dedup.fps_path)
     dedup.compact_stores()
     after = n_files(dedup.bands_path) + n_files(dedup.docs_path)
     assert after < before
+    assert n_files(dedup.sims_path) == 1 < n_sims
+    assert n_files(dedup.fps_path) == 1 < n_fps
 
     # a post-compaction batch still matches against full history
     # (" tail 9" keeps multiset-J vs "base + tail 0" ~0.97, above the
@@ -262,14 +265,16 @@ def test_label_delta_replay_idempotent(spark, dirs):
     assert labels_first == labels_replayed == {("c1", "c1"), ("c2", "c1")}
 
 
-def test_all_tiers_parity_with_batch_pipeline(spark, dirs):
+@pytest.mark.parametrize("hamming_radius", [3, 5])
+def test_all_tiers_parity_with_batch_pipeline(spark, dirs, hamming_radius):
     """Stream == one-shot with simhash AND containment tiers enabled
     (cap-free): the union of per-batch verified pairs over an id-ordered
     stream equals the batch pipeline's verified set on the same corpus.
     The corpus plants LSH-shaped near-dups, simhash-shaped pairs, a
     long-substring containment pair, and exact dups, split across three
     batches so every tier exercises both its new-vs-new and its
-    new-vs-history join."""
+    new-vs-history join.  Radius 5 takes the SimHash two-level plan,
+    whose probe broadcasts the new batch's 1-bit-flip expansion."""
     import dataclasses
     import random
     import tempfile
@@ -282,6 +287,7 @@ def test_all_tiers_parity_with_batch_pipeline(spark, dirs):
         simhash_enabled=True,
         substring_enabled=True,
         fingerprint_cap=10**9,
+        hamming_radius=hamming_radius,
         run_id="stream_tiers",
     )
     vocab = [f"tok{v}" for v in range(500)]
@@ -373,18 +379,14 @@ def test_fp_cap_mid_stream_is_observable(spark, dirs):
     sink.process_batch(
         spark.createDataFrame([doc(i) for i in range(5)], SCHEMA), 0
     )
-    hot0 = spark.read.option("recursiveFileLookup", "true").parquet(
-        sink.hot_fps_path
-    )
+    hot0 = spark.read.parquet(sink.hot_fps_path)
     assert hot0.count() == 0
     # batch 1: 5 more — prefix count 10 > cap 6: the shared fingerprints
     # must cross the cap NOW, with count-at-detection recorded
     sink.process_batch(
         spark.createDataFrame([doc(i) for i in range(5, 10)], SCHEMA), 1
     )
-    hot1 = spark.read.option("recursiveFileLookup", "true").parquet(
-        sink.hot_fps_path
-    )
+    hot1 = spark.read.parquet(sink.hot_fps_path)
     hot_rows = hot1.collect()
     assert hot_rows, "cap crossing left no hot_fps_store rows"
     assert all(r.n_docs > cfg.fingerprint_cap for r in hot_rows)
@@ -429,7 +431,6 @@ def _hot_rows(spark, sink):
     return sorted(
         tuple(r)
         for r in spark.read.schema(STORE_SCHEMAS["hot_fps_store"])
-        .option("recursiveFileLookup", "true")
         .parquet(sink.hot_fps_path)
         .collect()
     )
@@ -548,15 +549,13 @@ def test_pinned_store_schemas_match_written_files(two_batch_sink):
     }
     pinned["cluster_labels"] = labels_schema()
     pinned["batch_metrics"] = _METRICS_DDL
+    pinned["hot_fps_store"] = STORE_SCHEMAS["hot_fps_store"]
     for store, ddl in pinned.items():
         path = os.path.join(sink.state_dir, store)
         inferred = spark.read.parquet(path).schema
         assert spark.read.schema(ddl).parquet(path).schema == inferred, store
-    hot = spark.read.option("recursiveFileLookup", "true")
-    assert (
-        hot.schema(STORE_SCHEMAS["hot_fps_store"]).parquet(sink.hot_fps_path).schema
-        == hot.parquet(sink.hot_fps_path).schema
-    )
+    # the batch_id=N directory alone carries the hot record's batch id
+    assert "batch_id" in spark.read.parquet(sink.hot_fps_path).columns
 
 
 def test_batch_metrics_record_candidate_fetch(two_batch_sink):

@@ -57,7 +57,7 @@ def test_lcs_verify_exact_on_planted_overlaps(spark):
             rows.append((i + 1000, copy))
             expected[(i, i + 1000)] = ov_len
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    cands = containment_candidates(df, "doc_id", "text", min_len=16, window=8)
+    cands, _ = containment_candidates(df, "doc_id", "text", min_len=16, window=8)
     got = {
         (r["id1"], r["id2"]): r["lcs_len"]
         for r in lcs_verify(cands, df, "doc_id", "text", min_len=30).collect()

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 from enum import Enum
 from typing import Optional
 
@@ -94,15 +94,15 @@ class AlgorithmConfig:
 class PipelineConfig:
     """Whole-run config for the near-duplicate pipeline.
 
-    ``shingle_mode``/``ngram_size``/``case_sensitive`` feed the reference
-    tokenizer semantics (SURVEY.md §2.2); the rest parameterize the scale
-    machinery the reference lacks.
+    ``shingle_mode``/``ngram_size`` feed the reference tokenizer semantics
+    (SURVEY.md §2.2; shingles are case-sensitive); the rest parameterize the
+    scale machinery the reference lacks.  Every field is honoured by the
+    pipeline.
     """
 
     # shingling (reference tokenizer semantics)
     shingle_mode: Preprocessing = Preprocessing.NGRAM
     ngram_size: int = 3
-    case_sensitive: bool = True
 
     # MinHash / LSH.  Default b=25/r=5: collision P at the J=0.8 verify
     # threshold is 1-(1-0.8^5)^25 = 0.9998 (recall margin), while the
@@ -129,16 +129,12 @@ class PipelineConfig:
     exact_dedup_first: bool = True
 
     # SimHash / Hamming banding.  ``simhash_enabled`` turns the whole
-    # pass off — used by deployments that want a single-candidate-source
-    # pipeline (e.g. the streaming-equality soak, whose incremental sink
-    # is minhash-LSH only) and by corpora where the band pass alone
-    # carries recall.
+    # pass off (batch and stream alike) — for corpora where the band pass
+    # alone carries recall.
     simhash_enabled: bool = True
-    simhash_bits: int = 64
     hamming_radius: int = 3
 
-    # verification
-    verify_algorithm: Algorithm = Algorithm.JACCARD
+    # verification: exact multiset Jaccard (reference NGRAM semantics)
     verify_threshold: float = 0.8
 
     # skew handling
@@ -222,11 +218,3 @@ class PipelineConfig:
         payload.pop("adaptive_enabled", None)
         blob = json.dumps(payload, sort_keys=True, default=str).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
-
-    def kernel_config(self) -> AlgorithmConfig:
-        return AlgorithmConfig(
-            algorithm=self.verify_algorithm,
-            preprocessing=self.shingle_mode,
-            case_sensitive=self.case_sensitive,
-            ngram_size=self.ngram_size,
-        )

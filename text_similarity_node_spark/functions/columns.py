@@ -189,13 +189,6 @@ def levenshtein_similarity(c1: Column, c2: Column) -> Column:
     )
 
 
-def levenshtein_distance_thresholded(c1: Column, c2: Column, threshold: int) -> Column:
-    """Banded Levenshtein via the built-in 3-arg form; returns threshold+1
-    when exceeded (reference banding contract, levenshtein.cpp:168-246)."""
-    d = F.levenshtein(c1, c2, threshold)
-    return F.when(d < 0, F.lit(threshold + 1)).otherwise(d)
-
-
 def levenshtein_similarity_banded(c1: Column, c2: Column, band: int) -> Column:
     """sim = 1 - d/max(len) where d comes from the banded 3-arg built-in
     (O(band·n) + early abandon instead of O(n²), levenshtein.cpp:168-246).

@@ -4,8 +4,7 @@ Per the north rule, ALL Python execution is Arrow-batched (`pandas_udf`) —
 never row-at-a-time `F.udf`.  These wrap the reference-parity scalar kernels
 (kernels.py) for the algorithms Spark has no built-in for (Damerau, Jaro,
 Jaro-Winkler, the exact multiset measures when case-folding is needed), and
-provide numpy-vectorized batch implementations where the per-pair work is
-heavy (edit-distance DP).
+hash tokens for the signature UDFs.
 
 Null semantics: a null input string produces a null result (DataFrame error
 channel — the analogue of the reference's ``Result<T>`` wrapper,
@@ -21,9 +20,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import Algorithm, AlgorithmConfig
+from ..config import AlgorithmConfig
 from . import kernels
-from .unicode import fold_chars_positional, fold_string
 
 
 def _pairwise_udf(fn: Callable[[str, str], Optional[float]], ret=T.DoubleType()):
@@ -62,60 +60,6 @@ def distance_udf(cfg: AlgorithmConfig):
         return float(kernels.distance(a, b, cfg))
 
     return _pairwise_udf(fn)
-
-
-# ---------------------------------------------------------------------------
-# numpy-vectorized batch edit distance (hot verify path)
-# ---------------------------------------------------------------------------
-
-
-def _lev_numpy(a: str, b: str) -> int:
-    """Row-DP with numpy vector ops along the row — O(min_len) numpy calls
-    per pair instead of O(len^2) Python steps."""
-    if len(a) > len(b):
-        a, b = b, a
-    if not a:
-        return len(b)
-    ca = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32)
-    cb = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
-    prev = np.arange(len(ca) + 1, dtype=np.int64)
-    cur = np.empty_like(prev)
-    offsets = np.arange(len(prev))
-    for j in range(1, len(cb) + 1):
-        cur[0] = j
-        # substitution/deletion are elementwise over the previous row
-        np.minimum(prev[:-1] + (ca != cb[j - 1]), prev[1:] + 1, out=cur[1:])
-        # insertion (cur[i-1]+1) is a prefix scan:
-        # cur[i] = min_{k<=i}(cur[k] + (i-k)) = i + mins(cur[k]-k)
-        cur = np.minimum.accumulate(cur - offsets) + offsets
-        prev, cur = cur, prev
-    return int(prev[len(ca)])
-
-
-def levenshtein_batch_udf(case_sensitive: bool = True):
-    """Batch Levenshtein similarity with reference case-fold semantics.
-    (For case-sensitive ASCII data prefer columns.levenshtein_similarity —
-    pure JVM.)"""
-
-    @F.pandas_udf(T.DoubleType())
-    def udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        out = np.empty(len(s1), dtype=np.float64)
-        for i, (a, b) in enumerate(zip(s1, s2)):
-            if a is None or b is None:
-                out[i] = np.nan
-                continue
-            if not case_sensitive:
-                a = fold_chars_positional(fold_string(a))
-                b = fold_chars_positional(fold_string(b))
-            if a == b:
-                out[i] = 1.0
-            elif not a or not b:
-                out[i] = 0.0
-            else:
-                out[i] = 1.0 - _lev_numpy(a, b) / max(len(a), len(b))
-        return pd.Series(out)
-
-    return udf
 
 
 # ---------------------------------------------------------------------------

@@ -100,7 +100,3 @@ def fold_chars_positional(s: str) -> str:
     comparison, matching ``unicode_chars_equal`` (levenshtein.cpp:24-50)
     including the ASCII ``c | 0x20`` punctuation-equating quirk."""
     return s.translate(_POSITIONAL_FOLD)
-
-
-def is_ascii(s: str) -> bool:
-    return s.isascii()

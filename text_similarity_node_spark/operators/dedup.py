@@ -49,7 +49,7 @@ def neardup_dedup(
     sig = minhash.with_minhash(docs, "tokens", cfg)
     bands = minhash.explode_bands(sig, "rid", "minhash", cfg)
     pairs, _ = lsh.candidate_pairs(bands, cfg, id_col="rid")
-    verified = verify.verify_pairs_multiset_jaccard(
+    verified = verify.verify_pairs_multiset_jaccard_arrays(
         pairs, docs, "rid", "tokens", cfg.verify_threshold
     ).select("id1", "id2")
     comp = connected_components(

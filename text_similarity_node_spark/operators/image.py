@@ -251,7 +251,7 @@ def video_neardup(
     pseudo = hashed.select(
         (F.col(id_col) * 1024 + F.col("pos")).alias("clip_id"), "simhash"
     )
-    cands = simhash.simhash_candidates(pseudo, cfg)
+    cands, _dispositions = simhash.simhash_candidates(pseudo, cfg)
     return (
         cands.filter(F.col("id1") % 1024 == F.col("id2") % 1024)
         .select(
@@ -284,4 +284,5 @@ def image_neardup(
         F.col(id_col).alias("clip_id"),
         phash_udf()(F.col(bytes_col), F.col(codec_col)).alias("simhash"),
     ).filter(F.col("simhash").isNotNull())
-    return simhash.simhash_candidates(hashed, cfg)
+    pairs, _dispositions = simhash.simhash_candidates(hashed, cfg)
+    return pairs

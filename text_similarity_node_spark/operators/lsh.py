@@ -1,26 +1,42 @@
-"""LSH candidate generation: salted, skew-aware band self-join.
+"""LSH candidate generation: one key function per tier, two join shapes.
 
-The core scale problem (SURVEY.md §7 hard-part #2): a band key shared by m
-rows yields m(m-1)/2 candidate pairs — degenerate bands (boilerplate /
-silence transcripts) explode quadratically.  Strategy here:
+Every text candidate tier reduces a document to keys
+``(id, band_id, band_hash)`` -- MinHash bands (``minhash.explode_bands``),
+SimHash pigeonhole blocks (``simhash.block_keys``) and winnowing
+fingerprints (``suffix.fingerprint_keys``) -- and two documents are
+candidates iff they share a key.  The keys are joined in one of two shapes:
 
-1. count rows per (band_id, band_hash) key — one cheap aggregation;
-2. keys with count > ``band_cap`` are *dropped with metrics* (never
-   silently: the dropped key count and row mass go to the metrics sink) —
-   at web scale such bands are boilerplate, and the SimHash + substring
-   passes still cover their members;
-3. keys with ``hot_band_threshold < count <= band_cap`` go through a
+* ``candidate_pairs`` -- data at rest (the batch pipeline, driver queries):
+  a salted, capped self-join of the whole key table.
+* ``probe_pairs`` -- a micro-batch against history (the streaming sink):
+  the new batch's keys are broadcast and history streams through a
+  broadcast-hash join, so the per-batch cost is O(batch + candidates) and
+  history is never shuffled.
+
+Both emit canonical ``id1 < id2`` pairs.
+
+The scale problem of the at-rest shape (SURVEY.md §7 hard-part #2): a band
+key shared by m rows yields m(m-1)/2 candidate pairs -- degenerate bands
+(boilerplate / silence transcripts) explode quadratically.  Strategy:
+
+1. count rows per (band_id, band_hash) key -- one cheap aggregation;
+2. keys with count > ``cap`` (default ``band_cap``) are *dropped with
+   metrics* (never silently: the caller writes the dispositions to the
+   ledger) -- at web scale such bands are boilerplate, and the other tiers
+   still cover their members;
+3. keys with ``hot_band_threshold < count <= cap`` go through a
    **salted triangle join**: rows get a deterministic salt in [0, g); the
    pair space is covered by joining salt-block pairs (i <= j), replicating
-   each row g times on the build side only — bounded fan-out, no single
+   each row g times on the build side only -- bounded fan-out, no single
    reducer sees the whole hot key;
 4. cold keys take the same join with one salt bucket -- exactly the plain
    equi-join.  Their fan-out is bounded by ``hot_band_threshold``; no
    skew handling is left to AQE, which the pipeline may pin off
    (``PipelineConfig.adaptive_enabled``).
 
-Pairs are deduped on (id1 < id2) and across bands with dropDuplicates —
-at most one row per candidate pair leaves this stage.
+``candidate_pairs`` dedupes pairs across keys -- at most one row per
+candidate pair leaves it.  ``probe_pairs`` does not (a pair sharing k keys
+appears up to 2k times): the sink dedupes the union of its tiers once.
 """
 
 from __future__ import annotations
@@ -37,11 +53,14 @@ def candidate_pairs(
     id_col: str = "clip_id",
     right_bands: DataFrame | None = None,
     carry_cols: list[str] | None = None,
+    cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """bands(id, band_id, band_hash) -> (pairs(id1, id2), band_metrics).
+    """bands(id, band_id, band_hash) -> (pairs(id1, id2), dispositions).
 
-    band_metrics rows: (band_id, band_hash, n_rows, disposition) with
+    dispositions rows: (band_id, band_hash, n_rows, disposition) with
     disposition in {cold, salted, dropped} — the no-silent-caps ledger.
+    ``cap`` is the per-key row cap; it defaults to ``cfg.band_cap`` (the
+    fingerprint tier passes ``fingerprint_cap``).
 
     ``right_bands`` (optional) makes the join asymmetric: probe keys come
     from ``bands``, build keys from ``right_bands`` (e.g. SimHash two-level
@@ -55,6 +74,7 @@ def candidate_pairs(
     corpus-wide joins to re-attach verification payloads (e.g. the sketch)."""
     key = ["band_id", "band_hash"]
     carry_cols = carry_cols or []
+    cap = cfg.band_cap if cap is None else cap
 
     # bands is consumed by the counts aggregate and (twice) by the salted
     # self-join; the persist keeps the upstream signature decode from
@@ -78,7 +98,7 @@ def candidate_pairs(
     counts = rbands.groupBy(*key).agg(F.count(F.lit(1)).alias("n_rows"))
     counts = counts.withColumn(
         "disposition",
-        F.when(F.col("n_rows") > cfg.band_cap, F.lit("dropped"))
+        F.when(F.col("n_rows") > cap, F.lit("dropped"))
         .when(F.col("n_rows") > cfg.hot_band_threshold, F.lit("salted"))
         .otherwise(F.lit("cold")),
     ).persist()
@@ -128,45 +148,66 @@ def candidate_pairs(
     ).select(
         id_col, F.xxhash64("_bkey", "salt_j").alias("_jkey"), *carry_cols
     )
-    l = left.alias("l")
-    r = right.alias("r")
-    join_cond = (
+    l, r = left.alias("l"), right.alias("r")
+    # symmetric: each unordered pair meets once per shared key with the
+    # smaller id on the left.  Asymmetric: a pair can match in both
+    # directions (x's exact key in y's expansion AND vice versa); cover
+    # both, and let the canonical select order the ids.
+    lid, rid = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    pairs = l.join(
+        r,
         (F.col("l._jkey") == F.col("r._jkey"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-    )
-    if right_bands is not None:
-        # asymmetric: a pair can match in both directions (x's exact key in
-        # y's expansion AND vice versa); cover both so id1 < id2 still
-        # enumerates every pair, then dedupe.
-        join_cond = (
-            (F.col("l._jkey") == F.col("r._jkey"))
-            & (F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
-        )
-    out_cols = [
-        F.least(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("id1"),
-        F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("id2"),
-    ] if right_bands is not None else [
-        F.col(f"l.{id_col}").alias("id1"),
-        F.col(f"r.{id_col}").alias("id2"),
-    ]
-    carry_out = []
-    if carry_cols and right_bands is not None:
-        # keep carried payloads aligned with the (id1, id2) canonical order
-        swap = F.col(f"l.{id_col}") > F.col(f"r.{id_col}")
-        for c in carry_cols:
-            carry_out.append(
-                F.when(swap, F.col(f"r.{c}")).otherwise(F.col(f"l.{c}")).alias(f"{c}_1")
-            )
-            carry_out.append(
-                F.when(swap, F.col(f"l.{c}")).otherwise(F.col(f"r.{c}")).alias(f"{c}_2")
-            )
-    elif carry_cols:
-        for c in carry_cols:
-            carry_out.append(F.col(f"l.{c}").alias(f"{c}_1"))
-            carry_out.append(F.col(f"r.{c}").alias(f"{c}_2"))
-    pairs = (
-        l.join(r, join_cond)
-        .select(*out_cols, *carry_out)
-        .dropDuplicates(["id1", "id2"])
-    )
-    return pairs, counts
+        & ((lid < rid) if right_bands is None else (lid != rid)),
+    ).select(*_canonical("l", "r", id_col, carry_cols))
+    return pairs.dropDuplicates(["id1", "id2"]), counts
+
+
+def probe_pairs(
+    new_keys: DataFrame,
+    history_keys: DataFrame | None,
+    build_keys: DataFrame | None = None,
+    carry_cols: list[str] | None = None,
+) -> DataFrame:
+    """Keys ``(clip_id, band_id, band_hash)`` of a micro-batch (and of
+    history) -> canonical candidate pairs (id1 < id2 [, {col}_1, {col}_2])
+    with at least one new member.
+
+    The broadcast side is the new batch: ``build_keys`` when given (e.g.
+    the SimHash two-level plan's 1-bit-flip expansion of the new keys),
+    else ``new_keys``.  The streamed side is ``new_keys`` plus
+    ``history_keys``, so history is never shuffled and history-vs-history
+    pairs are never formed.  Each new-vs-new pair meets in both orders,
+    so the asymmetric build side covers it like ``candidate_pairs``'
+    ``right_bands``.  Uncapped: a cap over an arrival prefix is the
+    caller's policy.  Pairs repeat once per shared key; callers dedupe."""
+    carry_cols = carry_cols or []
+    cols = ["clip_id", "band_id", "band_hash", *carry_cols]
+    probe = new_keys.select(*cols)
+    if history_keys is not None:
+        probe = probe.unionByName(history_keys.select(*cols))
+    build = (new_keys if build_keys is None else build_keys).select(*cols)
+    p, b = probe.alias("p"), F.broadcast(build).alias("b")
+    return p.join(
+        b,
+        (F.col("p.band_id") == F.col("b.band_id"))
+        & (F.col("p.band_hash") == F.col("b.band_hash"))
+        & (F.col("p.clip_id") != F.col("b.clip_id")),
+    ).select(*_canonical("p", "b", "clip_id", carry_cols))
+
+
+def _canonical(a: str, b: str, id_col: str, carry_cols: list[str]) -> list:
+    """Select list ordering a joined row's two ids as (id1 < id2), with
+    each carried column following its id as ``{col}_1`` / ``{col}_2``."""
+    swap = F.col(f"{a}.{id_col}") > F.col(f"{b}.{id_col}")
+
+    def ordered(c: str) -> tuple:
+        # (c of the smaller-id side, c of the larger-id side)
+        x, y = F.col(f"{a}.{c}"), F.col(f"{b}.{c}")
+        return F.when(swap, y).otherwise(x), F.when(swap, x).otherwise(y)
+
+    id1, id2 = ordered(id_col)
+    out = [id1.alias("id1"), id2.alias("id2")]
+    for c in carry_cols:
+        c1, c2 = ordered(c)
+        out += [c1.alias(f"{c}_1"), c2.alias(f"{c}_2")]
+    return out

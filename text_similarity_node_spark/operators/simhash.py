@@ -6,8 +6,10 @@ similarity get SimHash values within a small Hamming distance.
 
 Candidate generation uses the pigeonhole block trick: split the 64-bit
 sketch into ``hamming_radius + 1`` blocks — any pair within the radius must
-agree exactly on at least one block — then equi-join on (block_id,
-block_value).  Verification is pure JVM: ``bit_count(s1 ^ s2) <= radius``.
+agree exactly on at least one block.  ``block_keys`` turns the blocks into
+``(id, band_id, band_hash)`` keys for either of ``lsh``'s join shapes (the
+batch self-join or the streaming probe), and ``within_radius`` is the
+verification both apply: pure JVM ``bit_count(s1 ^ s2) <= radius``.
 
 The sketch itself is one Arrow-batched numpy UDF: token hash -> 64 bit
 columns (unpackbits), weighted by token count, sign-reduced.
@@ -122,26 +124,19 @@ def hamming_blocks_expanded(sim_col: Column, radius: int) -> Column:
     return F.array(*entries)
 
 
-def simhash_candidates(
-    df: DataFrame, cfg: PipelineConfig, id_col: str = "clip_id", sim_col: str = "simhash"
-) -> DataFrame:
-    """(id, simhash) -> candidate pairs with hamming <= radius, verified
-    JVM-side with bit_count(xor).
+def block_keys(
+    df: DataFrame, radius: int, id_col: str = "clip_id", sim_col: str = "simhash"
+) -> tuple[DataFrame, DataFrame | None]:
+    """(id, simhash) -> (probe, build) key frames
+    (id, simhash, band_id, band_hash) for ``lsh``'s join shapes.
 
-    The block equi-join goes through ``lsh.candidate_pairs``' skew
-    disposition (cold / salted-triangle / capped-with-metrics), so a
-    degenerate sketch value (e.g. simhash 0 from near-empty token sets) or
-    a narrow-key radius can't put a whole hot key on one reducer."""
-    from . import lsh
-
-    radius = cfg.hamming_radius
-    _, _, flip = _block_plan(radius)
+    probe holds each sketch's exact block keys.  build is the 1-bit-flip
+    expansion under the two-level plan, else ``None`` (the exact keys
+    join themselves).  Either way a pair within the radius shares a key."""
 
     def _explode(keys_col: Column) -> DataFrame:
         return df.select(
-            F.col(id_col),
-            F.col(sim_col),
-            F.explode(keys_col).alias("blk"),
+            F.col(id_col), F.col(sim_col), F.explode(keys_col).alias("blk")
         ).select(
             id_col,
             sim_col,
@@ -149,20 +144,42 @@ def simhash_candidates(
             F.col("blk.block_value").alias("band_hash"),
         )
 
+    _, _, flip = _block_plan(radius)
     probe = _explode(hamming_blocks(F.col(sim_col), radius))
     build = (
         _explode(hamming_blocks_expanded(F.col(sim_col), radius)) if flip else None
     )
-    pairs, _metrics = lsh.candidate_pairs(
+    return probe, build
+
+
+def within_radius(pairs: DataFrame, radius: int, sim_col: str = "simhash") -> DataFrame:
+    """Candidate pairs carrying ``{sim_col}_1``/``{sim_col}_2`` -> the pairs
+    within Hamming ``radius``, with their ``hamming`` distance, verified
+    JVM-side with bit_count(xor)."""
+    return pairs.withColumn(
+        "hamming",
+        F.bit_count(F.col(f"{sim_col}_1").bitwiseXOR(F.col(f"{sim_col}_2"))),
+    ).filter(F.col("hamming") <= radius)
+
+
+def simhash_candidates(
+    df: DataFrame, cfg: PipelineConfig, id_col: str = "clip_id", sim_col: str = "simhash"
+) -> tuple[DataFrame, DataFrame]:
+    """(id, simhash) -> (pairs(id1, id2, hamming) with hamming <= radius,
+    the block-key dispositions).
+
+    The block equi-join goes through ``lsh.candidate_pairs``' skew
+    disposition (cold / salted-triangle / capped-with-metrics), so a
+    degenerate sketch value (e.g. simhash 0 from near-empty token sets) or
+    a narrow-key radius can't put a whole hot key on one reducer; the
+    dispositions are what the caller's ledger audits."""
+    from . import lsh
+
+    probe, build = block_keys(df, cfg.hamming_radius, id_col, sim_col)
+    pairs, dispositions = lsh.candidate_pairs(
         probe, cfg, id_col=id_col, right_bands=build, carry_cols=[sim_col]
     )
     return (
-        pairs.withColumn(
-            "hamming",
-            F.bit_count(
-                F.col(f"{sim_col}_1").bitwiseXOR(F.col(f"{sim_col}_2"))
-            ),
-        )
-        .filter(F.col("hamming") <= radius)
-        .select("id1", "id2", "hamming")
+        within_radius(pairs, cfg.hamming_radius, sim_col).select("id1", "id2", "hamming"),
+        dispositions,
     )

@@ -15,8 +15,8 @@ equi-join on fingerprints is candidate-complete for long exact overlaps
 while emitting O(len/w) rows per document.
 
 Everything is one Arrow-batched numpy UDF (rolling hash via cumulative
-polynomial trick) plus a plain equi-join — no per-row Python, no shuffle of
-text.
+polynomial trick) plus ``lsh``'s capped key join over
+``fingerprint_keys`` — no per-row Python, no shuffle of text.
 """
 
 from __future__ import annotations
@@ -86,6 +86,14 @@ def fingerprint_udf(k: int, window: int):
     return udf
 
 
+def fingerprint_keys(fps: DataFrame, id_col: str) -> DataFrame:
+    """(id, fp) rows -> ``(id, band_id=0, band_hash=fp)`` keys for ``lsh``'s
+    join shapes: one band, the fingerprint its key."""
+    return fps.select(
+        id_col, F.lit(0).alias("band_id"), F.col("fp").alias("band_hash")
+    )
+
+
 def containment_candidates(
     df: DataFrame,
     id_col: str,
@@ -93,46 +101,32 @@ def containment_candidates(
     min_len: int = 32,
     window: int = 16,
     fingerprint_cap: int = 64,
-    return_metrics: bool = False,
-):
-    """df(id, text) -> candidate pairs (id1 < id2) sharing >= 1 winnowed
-    fingerprint of a >= min_len-char exact overlap.
+) -> tuple[DataFrame, DataFrame]:
+    """df(id, text) -> (pairs(id1 < id2), fingerprint dispositions): the
+    pairs sharing >= 1 winnowed fingerprint of a >= min_len-char exact
+    overlap.
 
     ``fingerprint_cap`` drops degenerate fingerprints shared by more than
     cap documents: a boilerplate sentence present in f docs otherwise
     yields f²/2 candidate pairs that share ONLY the boilerplate (measured
     1.37M of 1.7M candidates on a 20k-clip corpus before this cap).  Such
     pairs are not duplicates; members that really are near-dups still reach
-    verification through the MinHash pass.  With ``return_metrics`` the cap
-    is never silent: (pairs, fp_metrics) where fp_metrics has one row per
-    dropped fingerprint (fp, n_docs)."""
+    verification through the MinHash pass.  The cap is never silent: the
+    dispositions (``lsh.candidate_pairs``' rows, ``n_rows`` = docs per
+    fingerprint) mark each capped fingerprint ``dropped``.  Fingerprints
+    below the cap but above the default ``hot_band_threshold`` take the
+    salted join."""
+    from ..config import PipelineConfig
+    from . import lsh
+
     fps = df.select(
-        F.col(id_col).alias("rid"),
+        F.col(id_col),
         F.explode(fingerprint_udf(min_len, window)(F.col(text_col))).alias("fp"),
     ).distinct()
-    if return_metrics:
-        # the metrics aggregate and the pair join both consume fps; without
-        # this the fingerprint UDF runs twice.  persist, not localCheckpoint
-        # (disk write serializes on shared-disk hardware); the
-        # ContextCleaner unpersists the blocks once the plan is GC'd.
-        fps = fps.persist()
-    counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("n"))
-    # anti-join against the (small) hot set — broadcasting the keep-set
-    # would ship every distinct fingerprint to every executor
-    hot = counts.filter(F.col("n") > fingerprint_cap)
-    fps = fps.join(F.broadcast(hot.select("fp")), "fp", "left_anti")
-    a, b = fps.alias("a"), fps.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp")) & (F.col("a.rid") < F.col("b.rid")),
-        )
-        .select(F.col("a.rid").alias("id1"), F.col("b.rid").alias("id2"))
-        .dropDuplicates(["id1", "id2"])
+    return lsh.candidate_pairs(
+        fingerprint_keys(fps, id_col), PipelineConfig(), id_col=id_col,
+        cap=fingerprint_cap,
     )
-    if return_metrics:
-        return pairs, hot.select("fp", F.col("n").alias("n_docs"))
-    return pairs
 
 
 def _sa_lcs(s: str, t: str) -> int:

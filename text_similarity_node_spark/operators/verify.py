@@ -1,54 +1,36 @@
-"""Exact multiset-Jaccard verification of candidate pairs — scalable shape.
+"""Exact multiset-Jaccard verification of candidate pairs.
 
 Semantics: reference NGRAM-mode Jaccard (min-count intersection / max-count
 union, ``/root/reference/src/algorithms/token_based.cpp:30-43,103-126``),
 using the multiset identity |A ∪ B| = |A| + |B| - |A ∩ B| so only the
 intersection needs computing.
 
-Shape: inverted-index join, all codegen —
+Shape: sorted-array merge.  Each document is reduced once to a sorted array
+of xxhash64 gram hashes; the candidate pairs join against it (no shuffle of
+the arrays for the first join), and an Arrow-batched numpy UDF merges each
+pair's two arrays into the exact multiset |A ∩ B|.  Candidate sets reaching
+verification are prefiltered, so |pairs| << |docs| * grams/doc: an
+inverted-index join (explode grams, join on (pair, gram), sum the
+min-counts) would shuffle every pair x gram row instead -- at 400k docs /
+363k pairs ~176M rows through two join shuffles, whose I/O does not scale
+with cores (143 s at local[32] vs 210 s at local[8]).  The batch
+pipeline, the streaming sink, ``dedup.neardup_dedup`` and the driver
+queries all verify through this one shape.
 
-    gram_counts(id, g, c)  =  explode(shingles) -> groupBy(id, g) count
-    isz(id1, id2)          =  candidates ⋈ gc1 on id1 ⋈ gc2 on (id2, g)
-                              -> groupBy pair -> sum(least(c1, c2))
-    jaccard                =  isz / (t1 + t2 - isz)
-
-Why not per-pair count maps: building a MapType column with
-filter/size per distinct token is O(d*n) *interpreted* lambda calls per row
-(higher-order functions don't get codegen) — measured ~60s for 500
-transcript-sized rows; the exploded groupBy shape is linear, codegen'd, and
-shuffles on the gram key like any aggregation.
-
-Edge parity note: pairs with zero shared grams get Jaccard 0 (they drop out
-of the join) and pairs of empty-token documents never reach candidates
-(empty token sets produce no LSH bands), matching pipeline behavior; the
-scalar kernels in functions/kernels.py remain the full-fidelity contract
-including empty-vs-empty quick answers.
+Edge parity note: pairs with zero shared grams get Jaccard 0 and pairs of
+empty-token documents never reach candidates (empty token sets produce no
+LSH bands), matching pipeline behavior; the scalar kernels in
+functions/kernels.py remain the full-fidelity contract including
+empty-vs-empty quick answers.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def gram_counts(docs_tokens: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
-    """(id, tokens array) -> (id, g, c, total): per-token multiset counts
-    plus the document's total token count.
-
-    Tokens are xxhash64-folded to longs before the shuffle: the join keys
-    and aggregates then move 8-byte ints instead of variable-width strings
-    (~40% shuffle volume on 5-gram corpora).  A 64-bit collision would need
-    two distinct grams of the SAME document pair to collide (~2^-64 per
-    pair) to perturb one intersection count by one."""
-    flat = docs_tokens.select(
-        F.col(id_col).alias("_vid"),
-        F.size(F.col(tokens_col)).alias("total"),
-        F.explode(tokens_col).alias("g0"),
-    ).select("_vid", "total", F.xxhash64("g0").alias("g"))
-    return flat.groupBy("_vid", "total", "g").agg(F.count(F.lit(1)).alias("c"))
 
 
 def verify_pairs_multiset_jaccard_arrays(
@@ -60,14 +42,10 @@ def verify_pairs_multiset_jaccard_arrays(
     presorted_hashes: bool = False,
     total_col: str | None = None,
 ) -> DataFrame:
-    """Array-merge verify: the shuffle-free shape for PREFILTERED candidate
-    sets (|pairs| << |docs| * grams/doc).
+    """candidates(id1, id2 [, extra cols]) + docs(id, tokens) ->
+    (id1, id2, jaccard) with multiset Jaccard >= threshold.
 
-    The inverted-index shape (verify_pairs_multiset_jaccard) shuffles every
-    pair x gram row — at 400k docs / 363k pairs that is ~90M + 86M rows
-    through two join shuffles, and the shuffle I/O does not parallelize
-    with cores (measured 143 s at local[32] vs 210 s at local[8]).  Here
-    each doc is reduced ONCE to a sorted array of xxhash64 gram hashes
+    Each doc is reduced ONCE to a sorted array of xxhash64 gram hashes
     (JVM transform+sort_array); the small pair table joins against it
     (pairs side broadcast, array side streamed — no array shuffle for the
     first join), and an Arrow-batched numpy UDF merges each pair's two
@@ -130,47 +108,6 @@ def verify_pairs_multiset_jaccard_arrays(
     jac = F.col("isz").cast("double") / (F.col("t1") + F.col("t2") - F.col("isz"))
     return (
         scored.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
-
-
-def verify_pairs_multiset_jaccard(
-    candidates: DataFrame,
-    docs_tokens: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    threshold: float,
-) -> DataFrame:
-    """candidates(id1, id2 [, extra cols]) + docs(id, tokens) ->
-    (id1, id2, jaccard) with multiset Jaccard >= threshold."""
-    # g1 and g2 both read gc and it is deliberately NOT persisted: caching
-    # 86M gram rows (400k docs) costs more in columnar-cache build + memory
-    # pressure than recomputing the explode+aggregate (measured +60% stage
-    # wall at local[8])
-    gc = gram_counts(docs_tokens, id_col, tokens_col)
-    g1 = gc.select(
-        F.col("_vid").alias("id1"), F.col("g"), F.col("c").alias("c1"),
-        F.col("total").alias("t1"),
-    )
-    g2 = gc.select(
-        F.col("_vid").alias("id2"), F.col("g"), F.col("c").alias("c2"),
-        F.col("total").alias("t2"),
-    )
-    pairs = candidates.select("id1", "id2")
-    inter = (
-        pairs.join(g1, "id1")
-        .join(g2, ["id2", "g"])
-        .groupBy("id1", "id2")
-        .agg(
-            F.sum(F.least("c1", "c2")).alias("isz"),
-            F.first("t1").alias("t1"),
-            F.first("t2").alias("t2"),
-        )
-    )
-    jac = F.col("isz").cast("double") / (F.col("t1") + F.col("t2") - F.col("isz"))
-    return (
-        inter.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )

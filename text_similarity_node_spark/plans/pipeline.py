@@ -15,12 +15,14 @@ Design decisions that carry the 100 TB story:
   re-running a killed job skips completed stages (resume contract,
   tests/test_resume.py).
 * **Metrics + lineage ledgers.**  Each stage appends (run_id, stage,
-  config_hash, rows_in, rows_out, dropped, detail) — caps are never silent.
-* **Skew handling** lives in operators/lsh.py: one salted triangle join
-  (hot bands salted, degenerate bands capped with metrics), so every join
-  carries its own skew disposition.  AQE is pinned per
-  ``cfg.adaptive_enabled`` for the run (``None`` keeps the session's
-  setting); nothing here relies on it.
+  config_hash, rows_in, rows_out, dropped, detail) — caps are never silent:
+  every candidate tier's key dispositions reach the ledger as one audit row
+  (``lsh_band_audit``, ``simhash_band_audit``, ``containment_fp_audit``).
+* **Skew handling** lives in operators/lsh.py: all three tiers' keys go
+  through one salted triangle join (hot keys salted, degenerate keys capped
+  with metrics), so every join carries its own skew disposition.  AQE is
+  pinned per ``cfg.adaptive_enabled`` for the run (``None`` keeps the
+  session's setting); nothing here relies on it.
 * **Verification is a sorted-array merge**: the candidate union is deduped
   and passed through the multiset-sound MinHash prefilter, then each pair's
   presorted xxhash64 gram arrays are merged by an Arrow-batched numpy UDF
@@ -157,6 +159,22 @@ class NearDupPipeline:
             ],
             "metrics_partitions",
             schema=schema,
+        )
+
+    def _audit(self, stage: str, dispositions: DataFrame) -> None:
+        """One ledger row for a candidate tier's key dispositions
+        (``lsh.candidate_pairs``): ``dropped`` is the row mass of the
+        capped keys -- band rows, or documents per capped fingerprint --
+        and the detail counts the capped and the salted keys."""
+        disp = F.col("disposition")
+        dropped, dropped_keys, salted_keys = dispositions.agg(
+            F.coalesce(F.sum(F.when(disp == "dropped", F.col("n_rows"))), F.lit(0)),
+            F.count(F.when(disp == "dropped", F.lit(1))),
+            F.count(F.when(disp == "salted", F.lit(1))),
+        ).collect()[0]
+        self._log(
+            stage, -1, -1, dropped=int(dropped),
+            detail=f"dropped_keys={int(dropped_keys)},salted_keys={int(salted_keys)}",
         )
 
     def _lineage(self, stage: str, input_desc: str) -> None:
@@ -351,20 +369,8 @@ class NearDupPipeline:
         # downstream consumer can use; the margin is logged, never silent.
         def build_lsh_pairs():
             bands = minhash.explode_bands(signatures, "clip_id", "minhash", cfg)
-            pairs, band_metrics = lsh.candidate_pairs(bands, cfg)
-            dropped, salted = band_metrics.agg(
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("disposition") == "dropped", F.col("n_rows"))
-                    ),
-                    F.lit(0),
-                ),
-                F.count(F.when(F.col("disposition") == "salted", F.lit(1))),
-            ).collect()[0]
-            self._log(
-                "lsh_band_audit", -1, -1, dropped=int(dropped),
-                detail=f"salted_keys={int(salted)}",
-            )
+            pairs, dispositions = lsh.candidate_pairs(bands, cfg)
+            self._audit("lsh_band_audit", dispositions)
             pairs = minhash.prefilter_candidates(pairs, signatures, cfg)
             self._log(
                 "lsh_prefilter", -1, -1,
@@ -377,12 +383,12 @@ class NearDupPipeline:
         # Stage 3: SimHash Hamming candidates.
         if cfg.simhash_enabled:
             def build_simhash_pairs():
-                return (
-                    simhash.simhash_candidates(
-                        signatures.select("clip_id", "simhash"), cfg
-                    )
-                    .select("id1", "id2")
-                    .withColumn("source", F.lit("simhash"))
+                pairs, dispositions = simhash.simhash_candidates(
+                    signatures.select("clip_id", "simhash"), cfg
+                )
+                self._audit("simhash_band_audit", dispositions)
+                return pairs.select("id1", "id2").withColumn(
+                    "source", F.lit("simhash")
                 )
 
             sim_pairs = self._stage(
@@ -394,23 +400,14 @@ class NearDupPipeline:
         # Stage 4: containment (winnowed substring) candidates.
         if cfg.substring_enabled:
             def build_containment_pairs():
-                pairs, fp_hot = suffix.containment_candidates(
+                pairs, dispositions = suffix.containment_candidates(
                     rep_clips.select("clip_id", "transcript"),
                     "clip_id",
                     "transcript",
                     min_len=cfg.substring_min_len,
                     fingerprint_cap=cfg.fingerprint_cap,
-                    return_metrics=True,
                 )
-                dropped_fps, dropped_rows = (
-                    fp_hot.agg(
-                        F.count(F.lit(1)), F.coalesce(F.sum("n_docs"), F.lit(0))
-                    ).collect()[0]
-                )
-                self._log(
-                    "containment_fp_audit", -1, -1, dropped=int(dropped_rows),
-                    detail=f"capped_fingerprints={int(dropped_fps)}",
-                )
+                self._audit("containment_fp_audit", dispositions)
                 return pairs.withColumn("source", F.lit("containment"))
 
             sub_pairs = self._stage("containment_candidates", build_containment_pairs, rep_ids)

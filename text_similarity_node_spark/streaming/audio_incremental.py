@@ -46,12 +46,10 @@ from pyspark.sql import functions as F
 
 from ..operators.audio import pairwise_snr_udf
 from ..operators.audio_fp import audio_landmarks_udf
+from .ledger import _ISIN_PUSHDOWN_CAP, append_batch_metrics, store_exists
 
 #: hash partitions for the marks store (file layout only, not results)
 _MARK_PARTITIONS = 16
-#: above this many candidate clip ids, fetch payloads via semi-join
-#: instead of a collected isin list (driver never materializes big sets)
-_ISIN_PUSHDOWN_CAP = 100_000
 
 
 class IncrementalAudioDedup:
@@ -80,15 +78,9 @@ class IncrementalAudioDedup:
         self.pairs_path = os.path.join(state_dir, "verified_pairs")
         self.labels_path = os.path.join(state_dir, "cluster_labels")
 
-    def _store_exists(self, path: str) -> bool:
-        return os.path.exists(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         import time
 
-        from .ledger import append_batch_metrics
 
         t0 = time.time()
         lm_new = (
@@ -105,7 +97,7 @@ class IncrementalAudioDedup:
         )
 
         # exclude hashes already known hot (learned in earlier batches)
-        if self._store_exists(self.hot_path):
+        if store_exists(self.hot_path):
             known_hot = self.spark.read.parquet(self.hot_path).select("h")
             kept_new = lm_new.join(F.broadcast(known_hot), "h", "left_anti")
         else:
@@ -134,7 +126,7 @@ class IncrementalAudioDedup:
             F.col("a.h").alias("h"),
         )
         newly_hot_hist = None
-        if self._store_exists(self.marks_path):
+        if store_exists(self.marks_path):
             hist = self.spark.read.parquet(self.marks_path).select(
                 "clip_id", "h"
             )
@@ -180,7 +172,7 @@ class IncrementalAudioDedup:
         )
         n_cand_ids = cand_ids_df.count()
         payloads = batch_df.select("clip_id", "bytes")
-        if self._store_exists(self.clips_path) and n_cand_ids:
+        if store_exists(self.clips_path) and n_cand_ids:
             hist_clips = self.spark.read.parquet(self.clips_path).select(
                 "clip_id", "bytes"
             )

@@ -74,9 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-#: above this many candidate clip ids, fetch payloads via semi-join
-#: instead of a collected isin list (driver never materializes big sets)
-_ISIN_PUSHDOWN_CAP = 100_000
+from .ledger import _ISIN_PUSHDOWN_CAP, append_batch_metrics, store_exists
 
 
 class IncrementalAudioCascade:
@@ -130,13 +128,8 @@ class IncrementalAudioCascade:
 
     # -- helpers ----------------------------------------------------------
 
-    def _store_exists(self, path: str) -> bool:
-        return os.path.exists(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
     def _read(self, path: str) -> DataFrame | None:
-        if not self._store_exists(path):
+        if not store_exists(path):
             return None
         return self.spark.read.parquet(path)
 
@@ -249,7 +242,6 @@ class IncrementalAudioCascade:
             semitone_profile_udf,
             shift_invariant_key,
         )
-        from .ledger import append_batch_metrics
 
         t0 = time.time()
         batch_df = batch_df.select("clip_id", "bytes", "sr_hz").dropDuplicates(

@@ -47,9 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ann import ivf_assign_udf, train_ivf_centroids
-
-#: above this many candidate vec ids, fetch payloads via semi-join
-_ISIN_PUSHDOWN_CAP = 100_000
+from .ledger import _ISIN_PUSHDOWN_CAP, append_batch_metrics, store_exists
 
 
 class IncrementalSemanticDedup:
@@ -79,11 +77,6 @@ class IncrementalSemanticDedup:
         self.vec_path = os.path.join(state_dir, "vec_store")
         self.pairs_path = os.path.join(state_dir, "verified_pairs")
 
-    def _store_exists(self, path: str) -> bool:
-        return os.path.exists(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
     # -- centroids ---------------------------------------------------------
 
     def _centroids(self, batch_vecs: DataFrame) -> np.ndarray:
@@ -91,7 +84,7 @@ class IncrementalSemanticDedup:
         persist.  Training is deterministic (hash-selected sample, seeded
         k-means), so a replay of batch 0 after the persist loads the
         identical centroids — idempotent by construction."""
-        if self._store_exists(self.centroids_path):
+        if store_exists(self.centroids_path):
             rows = (
                 self.spark.read.parquet(self.centroids_path)
                 .orderBy("list_id")
@@ -112,7 +105,6 @@ class IncrementalSemanticDedup:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         import time
 
-        from .ledger import append_batch_metrics
 
         t0 = time.time()
         new = batch_df.select(
@@ -141,7 +133,7 @@ class IncrementalSemanticDedup:
         )
 
         cand = nn
-        if self._store_exists(self.member_path):
+        if store_exists(self.member_path):
             hist = self.spark.read.parquet(self.member_path).alias("h")
             def _pairs(joined):
                 return joined.select(
@@ -182,7 +174,7 @@ class IncrementalSemanticDedup:
         )
         n_cand_ids = cand_ids_df.count()
         vecs = tagged.select("vec_id", "v")
-        if self._store_exists(self.vec_path) and n_cand_ids:
+        if store_exists(self.vec_path) and n_cand_ids:
             hist_vecs = self.spark.read.parquet(self.vec_path)
             if n_cand_ids <= _ISIN_PUSHDOWN_CAP:
                 ids = [r[0] for r in cand_ids_df.collect()]
@@ -251,7 +243,7 @@ class IncrementalSemanticDedup:
             (self.member_path, ["list_id"], "vec_id"),
             (self.vec_path, [], "vec_id"),
         ):
-            if not self._store_exists(path):
+            if not store_exists(path):
                 continue
             df = spark.read.parquet(path)
             tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"

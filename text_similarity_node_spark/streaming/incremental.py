@@ -11,10 +11,14 @@ micro-batch is deduplicated against everything seen so far:
     band/sims/fps stores (history) ──────────┘                                   │
     docs store (gram arrays) ────────────────────────────────────────────────────┘
 
-All three batch-pipeline candidate tiers (minhash LSH bands, simhash
-pigeonhole blocks, winnowing containment fingerprints) run incrementally:
-each history store streams through a broadcast-hash probe against the new
-batch, so per-batch cost stays O(batch + candidates).  Cap-free, the
+All three candidate tiers are the batch pipeline's shared operators: the
+same key functions (``minhash.explode_bands``, ``simhash.block_keys``,
+``suffix.fingerprint_keys``) and the same Hamming check
+(``simhash.within_radius``), joined by ``lsh.probe_pairs`` -- the
+micro-batch shape of ``lsh.candidate_pairs``: each history store streams
+through a broadcast-hash probe against the new batch, so per-batch cost
+stays O(batch + candidates).  The only tier logic that lives here is the
+stream-only arrival-prefix fingerprint cap.  Cap-free, the
 union of per-batch verified pairs EQUALS the one-shot pipeline's
 (bench.py soak); the containment fingerprint cap counts over the arrival
 prefix rather than the full corpus, and every firing is durable in
@@ -42,9 +46,9 @@ overhead, so the sink keeps the job count small:
 
 Why batch cost does NOT grow linearly with history:
 
-* The new-vs-history band join broadcasts the NEW side (a micro-batch's
-  bands are small by definition), so the history store is streamed through
-  a broadcast-hash join — never shuffled.  History partitions are read in
+* Every tier's probe broadcasts the NEW side (a micro-batch's keys are
+  small by definition), so the history stores are streamed through a
+  broadcast-hash join — never shuffled.  History partitions are read in
   parallel and the per-batch shuffle volume is O(batch + candidates),
   independent of history size.
 * The band store is hash-partitioned on ``pmod(band_hash, P)`` and sorted
@@ -69,21 +73,20 @@ pipeline AND that per-batch wall time stays flat as history grows.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators import minhash
+from ..operators import lsh, minhash, simhash, suffix
 from ..operators.verify import verify_pairs_multiset_jaccard_arrays
 from ..plans.pipeline import _tokens_col
+from .ledger import _ISIN_PUSHDOWN_CAP, append_batch_metrics, store_exists
 
 # number of hash partitions for the band store; at cluster scale make this
 # proportional to history volume (it only affects file layout, not results)
 _BAND_PARTITIONS = 16
-# above this many candidate ids, skip the isin pushdown (a huge IN list
-# costs more to evaluate than it saves) and fall back to a shuffle join
-_ISIN_PUSHDOWN_CAP = 100_000
 
 # Fixed schema of each store, keyed by its directory under the state dir
 # (partition columns last).  Clip ids are strings, as in the batch
@@ -94,7 +97,7 @@ STORE_SCHEMAS = {
     "docs_store": "clip_id string, gram_hashes array<bigint>, n_grams int",
     "sims_store": "clip_id string, simhash bigint",
     "fps_store": "fp bigint, clip_id string",
-    "hot_fps_store": "fp bigint, n_docs bigint, batch_id int",
+    "hot_fps_store": "fp bigint, n_docs bigint, batch_id int",  # batch_id: the dir
     "verified_pairs": "id1 string, id2 string, jaccard double, batch_id int",
 }
 
@@ -118,17 +121,18 @@ class IncrementalDedup:
         self.fps_path = os.path.join(state_dir, "fps_store")
         self.hot_fps_path = os.path.join(state_dir, "hot_fps_store")
 
-    def _store_exists(self, path: str) -> bool:
-        return os.path.exists(path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
     def _read(self, store: str) -> DataFrame:
         """One of the sink's stores (a dir under state_dir), read with its
         fixed schema."""
         return self.spark.read.schema(STORE_SCHEMAS[store]).parquet(
             os.path.join(self.state_dir, store)
         )
+
+    def _history(self, store: str) -> DataFrame | None:
+        """``_read(store)``, or None before the store's first append."""
+        if not store_exists(os.path.join(self.state_dir, store)):
+            return None
+        return self._read(store)
 
     def _features(self, batch_df: DataFrame) -> DataFrame:
         """The batch's per-doc features from one read and one tokenization:
@@ -143,18 +147,14 @@ class IncrementalDedup:
         )
         feats = minhash.with_minhash(docs, "tokens", cfg)
         if cfg.simhash_enabled:
-            from ..operators.simhash import with_simhash
-
-            feats = with_simhash(feats, "tokens")
+            feats = simhash.with_simhash(feats, "tokens")
         if cfg.substring_enabled:
-            from ..operators.suffix import fingerprint_udf
-
             # window=16 mirrors containment_candidates' default — the
             # winnowing guarantee is shared substrings >= min_len + 15
             feats = feats.withColumn(
                 "fps",
                 F.array_distinct(
-                    fingerprint_udf(cfg.substring_min_len, 16)(
+                    suffix.fingerprint_udf(cfg.substring_min_len, 16)(
                         F.col("transcript")
                     )
                 ),
@@ -174,8 +174,6 @@ class IncrementalDedup:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         import time
 
-        from .ledger import append_batch_metrics
-
         t0 = time.time()
         cfg = self.cfg
         bid = int(batch_id)
@@ -185,100 +183,38 @@ class IncrementalDedup:
         # input shape, precomputed once per doc at ingest time
         new_docs = feats.select("clip_id", "gram_hashes", "n_grams")
 
-        # candidates: new-vs-new plus new-vs-history.  Both joins broadcast
-        # the new side, so history is streamed, never shuffled.
-        a, b = new_bands.alias("a"), new_bands.alias("b")
-        nn = a.join(
-            F.broadcast(b),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.clip_id") < F.col("b.clip_id")),
-        ).select(
-            F.col("a.clip_id").alias("id1"), F.col("b.clip_id").alias("id2")
-        )
-        if self._store_exists(self.bands_path):
-            hist = self._read("bands_store").alias("h")
-            nh = hist.join(
-                F.broadcast(new_bands.alias("n")),
-                (F.col("n.band_id") == F.col("h.band_id"))
-                & (F.col("n.band_hash") == F.col("h.band_hash")),
-            ).select(
-                F.least(F.col("n.clip_id"), F.col("h.clip_id")).alias("id1"),
-                F.greatest(F.col("n.clip_id"), F.col("h.clip_id")).alias("id2"),
-            ).filter(F.col("id1") != F.col("id2"))
-            cand = nn.unionByName(nh)
-        else:
-            cand = nn
-        tiers = [cand]
+        # candidates: each tier keys the new batch (and its history store)
+        # with the batch pipeline's key function, and lsh.probe_pairs joins
+        # the keys -- new side broadcast, history streamed, never shuffled
+        tiers = [lsh.probe_pairs(new_bands, self._history("bands_store"))]
 
-        # ---- simhash tier (batch parity: operators/simhash.py) ----------
-        # Exact pigeonhole block keys of (new batch + full history) are
-        # probed against the BROADCAST expanded keys of the new batch
-        # only, so history streams through a broadcast-hash join exactly
-        # like the band store.  Pair coverage equals the batch tier's:
-        # new-vs-new pairs meet through both orders of the exact-vs-
-        # expanded join; a history clip h meets a new clip n iff some
-        # block of h is within 1 flipped bit of n's same block — the
-        # identical HmSearch predicate, applied when the LATER clip
-        # arrives.  The tier is cap-free (the batch tier's salted/capped
-        # band disposition is corpus-global and has no arrival-prefix
-        # analogue), so stream==batch equality is contractual exactly
-        # when no batch-side band cap fires — same contract as the
-        # cascade's hot-key caps.
+        # ---- simhash tier ------------------------------------------------
+        # A history clip h meets a new clip n iff some block of h is within
+        # 1 flipped bit of n's same block (two-level plan) or equal to it --
+        # the batch tier's predicate, applied when the LATER clip arrives.
+        # The tier is cap-free (the batch tier's salted/capped disposition
+        # is corpus-global and has no arrival-prefix analogue), so
+        # stream==batch equality is contractual exactly when no batch-side
+        # band cap fires -- same contract as the cascade's hot-key caps.
         new_sims = None
         if cfg.simhash_enabled:
-            from ..operators import simhash as sh
-
             radius = cfg.hamming_radius
             new_sims = feats.select("clip_id", "simhash")
-
-            def _blocks(df: DataFrame, blocks_fn) -> DataFrame:
-                return df.select(
-                    "clip_id",
-                    "simhash",
-                    F.explode(blocks_fn(F.col("simhash"), radius)).alias("blk"),
-                ).select(
-                    "clip_id", "simhash",
-                    F.col("blk.block_id").alias("block_id"),
-                    F.col("blk.block_value").alias("block_value"),
-                )
-
-            exp_new = _blocks(new_sims, sh.hamming_blocks_expanded)
-            exact_all = _blocks(new_sims, sh.hamming_blocks)
-            if self._store_exists(self.sims_path):
-                exact_all = exact_all.unionByName(
-                    _blocks(self._read("sims_store"), sh.hamming_blocks)
-                )
-            sim_cand = (
-                exact_all.alias("e")
-                .join(
-                    F.broadcast(exp_new.alias("x")),
-                    (F.col("e.block_id") == F.col("x.block_id"))
-                    & (F.col("e.block_value") == F.col("x.block_value"))
-                    & (F.col("e.clip_id") != F.col("x.clip_id")),
-                )
-                .withColumn(
-                    "hamming",
-                    F.bit_count(
-                        F.col("e.simhash").bitwiseXOR(F.col("x.simhash"))
-                    ),
-                )
-                .filter(F.col("hamming") <= radius)
-                .select(
-                    F.least(
-                        F.col("e.clip_id"), F.col("x.clip_id")
-                    ).alias("id1"),
-                    F.greatest(
-                        F.col("e.clip_id"), F.col("x.clip_id")
-                    ).alias("id2"),
-                )
+            probe, build = simhash.block_keys(new_sims, radius)
+            hist_sims = self._history("sims_store")
+            hist_probe = (
+                None if hist_sims is None
+                else simhash.block_keys(hist_sims, radius)[0]
             )
-            tiers.append(sim_cand)
+            tiers.append(simhash.within_radius(
+                lsh.probe_pairs(
+                    probe, hist_probe, build_keys=build, carry_cols=["simhash"]
+                ),
+                radius,
+            ))
 
-        # ---- containment tier (batch parity: operators/suffix.py) -------
-        # Same winnowing fingerprints, same equi-join; history fingerprints
-        # stream against the broadcast new-batch fingerprint set.  The
-        # boilerplate cap (cfg.fingerprint_cap) counts each fingerprint
+        # ---- containment tier: the arrival-prefix fingerprint cap --------
+        # The boilerplate cap (cfg.fingerprint_cap) counts each fingerprint
         # over the ARRIVAL PREFIX (new batch + history), not the full
         # corpus the batch pass sees: a fingerprint crossing the cap at
         # batch k is recorded in hot_fps_store with its count at
@@ -292,36 +228,26 @@ class IncrementalDedup:
         # this batch's own rows in fps_store and its own hot_fps_store
         # record are not history, so both are excluded — the replay
         # counts, caps and pairs exactly as the first attempt did.
-        fps_use = None
-        newly_hot = None
+        fps_use = newly_hot = None
         if cfg.substring_enabled:
             fps_new = feats.select("clip_id", F.explode("fps").alias("fp"))
-            if self._store_exists(self.hot_fps_path):
-                known_hot = (
-                    self.spark.read.schema(STORE_SCHEMAS["hot_fps_store"])
-                    .option("recursiveFileLookup", "true")
-                    .parquet(self.hot_fps_path)
-                    .filter(F.col("batch_id") != bid)
-                    .select("fp")
-                    .distinct()
-                )
+            known_hot = self._history("hot_fps_store")
+            if known_hot is not None:
+                known_hot = known_hot.filter(F.col("batch_id") != bid)
                 fps_new = fps_new.join(
-                    F.broadcast(known_hot), "fp", "left_anti"
+                    F.broadcast(known_hot.select("fp").distinct()), "fp",
+                    "left_anti",
                 )
-            # prefix count per fingerprint: this batch's docs + history
-            # docs (store holds every non-hot fingerprint row so far)
-            n_new = fps_new.groupBy("fp").agg(
-                F.count(F.lit(1)).alias("n_new")
-            )
-            hist_fps_hit = None
-            if self._store_exists(self.fps_path):
-                # localCheckpoint (not cache): severs lineage from the
-                # store directory this batch later APPENDS to, so the
-                # post-write metrics count can never re-list the store
-                # and see this batch's own rows as history
-                hist_fps_hit = (
-                    self._read("fps_store")
-                    .join(
+            # history rows of this batch's fingerprints (the store holds
+            # every non-hot fingerprint row so far).  localCheckpoint, not
+            # cache: it severs lineage from the store directory this batch
+            # later APPENDS to, so no later action can re-list the store
+            # and see this batch's own rows as history.
+            hist_fps = self._history("fps_store")
+            prefix = fps_new
+            if hist_fps is not None:
+                hist_fps = (
+                    hist_fps.join(
                         F.broadcast(fps_new.select("fp").distinct()), "fp"
                     )
                     .join(
@@ -331,58 +257,27 @@ class IncrementalDedup:
                     .dropDuplicates(["fp", "clip_id"])
                     .localCheckpoint()
                 )
-                n_hist = hist_fps_hit.groupBy("fp").agg(
-                    F.count(F.lit(1)).alias("n_hist")
-                )
-                counts = n_new.join(n_hist, "fp", "left").select(
-                    "fp",
-                    (
-                        F.col("n_new")
-                        + F.coalesce(F.col("n_hist"), F.lit(0))
-                    ).alias("n_docs"),
-                )
-            else:
-                counts = n_new.select(
-                    "fp", F.col("n_new").alias("n_docs")
-                )
-            newly_hot = counts.filter(
-                F.col("n_docs") > cfg.fingerprint_cap
-            ).localCheckpoint()
+                prefix = prefix.unionByName(hist_fps)
+            newly_hot = (
+                prefix.groupBy("fp")
+                .agg(F.count(F.lit(1)).alias("n_docs"))
+                .filter(F.col("n_docs") > cfg.fingerprint_cap)
+                .localCheckpoint()
+            )
             fps_use = fps_new.join(
                 F.broadcast(newly_hot.select("fp")), "fp", "left_anti"
             )
-            a, b = fps_use.alias("a"), fps_use.alias("b")
-            cont_nn = a.join(
-                F.broadcast(b),
-                (F.col("a.fp") == F.col("b.fp"))
-                & (F.col("a.clip_id") < F.col("b.clip_id")),
-            ).select(
-                F.col("a.clip_id").alias("id1"),
-                F.col("b.clip_id").alias("id2"),
-            )
-            tiers.append(cont_nn)
-            if hist_fps_hit is not None:
-                hist_use = hist_fps_hit.join(
-                    F.broadcast(newly_hot.select("fp")), "fp", "left_anti"
-                )
-                cont_nh = hist_use.alias("h").join(
-                    F.broadcast(fps_use.alias("n")),
-                    (F.col("h.fp") == F.col("n.fp"))
-                    & (F.col("h.clip_id") != F.col("n.clip_id")),
-                ).select(
-                    F.least(
-                        F.col("h.clip_id"), F.col("n.clip_id")
-                    ).alias("id1"),
-                    F.greatest(
-                        F.col("h.clip_id"), F.col("n.clip_id")
-                    ).alias("id2"),
-                )
-                tiers.append(cont_nh)
+            # history rows of a hot fingerprint find no partner: the
+            # broadcast new side no longer holds that fingerprint
+            tiers.append(lsh.probe_pairs(
+                suffix.fingerprint_keys(fps_use, "clip_id"),
+                None if hist_fps is None
+                else suffix.fingerprint_keys(hist_fps, "clip_id"),
+            ))
 
-        cand = tiers[0]
-        for t in tiers[1:]:
-            cand = cand.unionByName(t)
-        cand = cand.dropDuplicates(["id1", "id2"]).localCheckpoint()
+        cand = reduce(
+            DataFrame.unionByName, [t.select("id1", "id2") for t in tiers]
+        ).dropDuplicates(["id1", "id2"]).localCheckpoint()
 
         # gram arrays for exactly the docs the candidates touch: new-batch
         # docs from the feature checkpoint; historical docs via a
@@ -403,7 +298,7 @@ class IncrementalDedup:
         n_cand_ids = cand_ids_df.count() if over_cap else len(cand_ids)
         all_docs = new_docs
         docs_read = "none"
-        if n_cand_ids and self._store_exists(self.docs_path):
+        if n_cand_ids and store_exists(self.docs_path):
             hist_docs = self._read("docs_store")
             if over_cap:
                 docs_read = "semi_join"
@@ -457,10 +352,11 @@ class IncrementalDedup:
                 self.fps_path
             )
             # batch-keyed, overwritten on replay — idempotent, and the
-            # count-at-detection makes every cap firing observable
-            newly_hot.withColumn("batch_id", F.lit(bid)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self.hot_fps_path, f"batch_id={bid}"))
+            # count-at-detection makes every cap firing observable.  The
+            # batch_id=N directory is the record's only batch_id column.
+            newly_hot.write.mode("overwrite").parquet(
+                os.path.join(self.hot_fps_path, f"batch_id={bid}")
+            )
         # per-batch metrics row (batch-id-keyed file: replay overwrites);
         # counts come from the checkpoints / the just-written tiny pair dir
         append_batch_metrics(
@@ -476,7 +372,8 @@ class IncrementalDedup:
         )
 
     def compact_stores(self, target_files_per_partition: int = 1) -> None:
-        """Rewrite the band and doc stores to bounded file counts: each
+        """Rewrite the band, doc, simhash and fingerprint stores to
+        bounded file counts: each
         micro-batch appends its own small parquet files, and after many
         batches the footer-read overhead (one per file per scan) starts to
         dominate the history probe.  Compaction preserves layout
@@ -491,9 +388,11 @@ class IncrementalDedup:
         for store, part_cols, sort_col in (
             ("bands_store", ["bh_part"], "band_hash"),
             ("docs_store", [], "clip_id"),
+            ("sims_store", [], "clip_id"),
+            ("fps_store", [], "fp"),
         ):
             path = os.path.join(self.state_dir, store)
-            if not self._store_exists(path):
+            if not store_exists(path):
                 continue
             df = self._read(store)
             tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"

@@ -12,12 +12,27 @@ distinct candidate ids (``n_cand_ids``) and the read path (``docs_read``:
 Idempotence matches the pair stores: the file name is keyed by batch_id,
 so a replayed batch OVERWRITES its own metrics row instead of appending a
 duplicate — the ledger stays one-row-per-batch under crash/replay.
+
+The helpers every sink shares for its parquet stores live here too:
+``store_exists`` and the candidate-id fetch's ``_ISIN_PUSHDOWN_CAP``.
 """
 
 from __future__ import annotations
 
 import os
 import time
+
+# above this many candidate ids, a sink fetches payloads through a
+# left-semi join instead of a collected isin list: a huge IN list costs more
+# to evaluate than it saves, and the id set never has to fit on the driver
+_ISIN_PUSHDOWN_CAP = 100_000
+
+
+def store_exists(path: str) -> bool:
+    """Whether a store directory holds at least one parquet file."""
+    return os.path.exists(path) and any(
+        f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
+    )
 
 
 def append_batch_metrics(

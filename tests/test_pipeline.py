@@ -172,6 +172,41 @@ def test_simhash_band_cap_reaches_ledger(spark):
     assert audit.detail.startswith("dropped_keys=4,"), audit
 
 
+def test_pinned_rereads_match_inferred_schemas(spark):
+    """Every checkpointed stage is re-read with the schema of the frame it
+    wrote, and the final metrics read with the ledger's fixed schema; each
+    must equal the schema Spark infers from the written files."""
+    from text_similarity_node_spark.plans.pipeline import _METRICS_SCHEMA
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    rows = [(f"d{i}", f"a shared transcript with a small edit {i % 2}")
+            for i in range(4)]
+    rows += [(f"u{i}", f"unrelated words number {i} here") for i in range(4)]
+    clips = spark.createDataFrame(rows, "clip_id string, transcript string")
+    cfg = PipelineConfig(per_partition_metrics=False, run_id="pinned")
+    with tempfile.TemporaryDirectory() as wh:
+        pipe = NearDupPipeline(spark, cfg, wh)
+        reread = {}
+        write = pipe.catalog.write
+
+        def recording_write(df, table, config_hash):
+            reread[table] = out = write(df, table, config_hash)
+            return out
+
+        pipe.catalog.write = recording_write
+        pipe.run(clips)
+        assert {"exact_groups", "lsh_candidates", "simhash_candidates",
+                "containment_candidates", "verified_pairs",
+                "clusters"} <= set(reread)
+        for table, out in reread.items():
+            inferred = spark.read.parquet(pipe.catalog._path(table, pipe.chash))
+            assert out.schema == inferred.schema, table
+        pinned = pipe.catalog.read_ledger(
+            "metrics", schema=from_arrow_schema(_METRICS_SCHEMA)
+        )
+        assert pinned.schema == pipe.catalog.read_ledger("metrics").schema
+
+
 def test_twostar_cc_same_clusters(spark, pipeline_result):
     """cc_algorithm='twostar' is a drop-in: identical cluster assignments
     to the default hash-min on the same planted corpus."""

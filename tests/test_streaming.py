@@ -265,6 +265,112 @@ def test_label_delta_replay_idempotent(spark, dirs):
     assert labels_first == labels_replayed == {("c1", "c1"), ("c2", "c1")}
 
 
+# verified pairs of three batches: batch 1 extends a and b and starts c,
+# batch 2 merges a with b (and so c), batch 3 has no pairs
+_LABEL_BATCHES = [
+    [("a1", "a2"), ("a2", "a3"), ("b1", "b2")],
+    [("a3", "a4"), ("b2", "c1"), ("d1", "d2")],
+    [("a4", "b1"), ("c1", "c9")],
+    [],
+]
+
+
+def _write_pairs(pairs_path, bid, pairs):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = os.path.join(pairs_path, f"batch_id={bid}")
+    os.makedirs(d)
+    pq.write_table(
+        pa.table({"id1": [p[0] for p in pairs], "id2": [p[1] for p in pairs]},
+                 schema=pa.schema([("id1", pa.string()), ("id2", pa.string())])),
+        os.path.join(d, "part-0.parquet"),
+    )
+
+
+def test_label_update_paths_agree(spark, dirs):
+    """Per batch, the driver path (union-find) and the distributed path
+    (a cap of 0 forces hash-min) write label views equal to each other
+    and to union-find over every pair so far, and say which path ran."""
+    from text_similarity_node_spark.operators.components import union_find_labels
+    from text_similarity_node_spark.streaming.labels import (
+        current_labels,
+        update_labels,
+    )
+
+    _, state, _ = dirs
+    pairs_path = os.path.join(state, "pairs")
+    seen = []
+    for bid, pairs in enumerate(_LABEL_BATCHES):
+        _write_pairs(pairs_path, bid, pairs)
+        seen += pairs
+        views = []
+        for cap in (None, 0):
+            labels_path = os.path.join(state, f"labels_{cap}")
+            path, n_pairs = update_labels(
+                spark, pairs_path, labels_path, bid, cap=cap
+            )
+            assert n_pairs == len(pairs)
+            assert path == ("distributed" if cap == 0 and pairs else "driver")
+            views.append(dict(current_labels(spark, labels_path).collect()))
+        assert views[0] == views[1] == union_find_labels(seen), bid
+
+
+def test_label_update_job_count(spark, dirs):
+    """The driver path's label update of a batch that extends prior
+    components runs a handful of Spark jobs, where iterative hash-min ran
+    one localCheckpoint and one count per iteration (33 jobs here)."""
+    from text_similarity_node_spark.streaming.labels import update_labels
+
+    _, state, _ = dirs
+    pairs_path = os.path.join(state, "pairs")
+    labels_path = os.path.join(state, "labels")
+    sc = spark.sparkContext
+    for bid, pairs in enumerate(_LABEL_BATCHES[:2]):
+        _write_pairs(pairs_path, bid, pairs)
+        sc.setJobGroup(f"label_update_{bid}", "label update")
+        try:
+            update_labels(spark, pairs_path, labels_path, bid)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("label_update_1"))
+    assert n_jobs <= 5, n_jobs
+
+
+def test_sink_records_label_update_path(spark, dirs, monkeypatch):
+    """The text sink's metrics row names the label path: ``driver`` by
+    default, ``distributed`` once the cap is below the batch's pair
+    count, with the same cluster labels either way."""
+    import text_similarity_node_spark.streaming.labels as labels_mod
+    from text_similarity_node_spark.streaming.ledger import read_batch_metrics
+
+    _, state, _ = dirs
+    cfg = PipelineConfig(
+        verify_threshold=0.8, simhash_enabled=False, substring_enabled=False,
+        run_id="stream_label_path",
+    )
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    batches = [
+        [("c1", base), ("c2", base + "!"), ("d1", "unrelated words entirely")],
+        [("c4", base + " extra"), ("c5", base + "?")],
+    ]
+    got = {}
+    for cap in (None, 0):
+        if cap is not None:
+            monkeypatch.setattr(labels_mod, "_ISIN_PUSHDOWN_CAP", cap)
+        sink = IncrementalDedup(spark, cfg, os.path.join(state, f"cap_{cap}"))
+        for bid, rows in enumerate(batches):
+            sink.process_batch(spark.createDataFrame(rows, SCHEMA), bid)
+        got[cap] = {
+            (r.clip_id, r.cluster_id) for r in sink.cluster_labels().collect()
+        }
+        paths = {r.labels_update
+                 for r in read_batch_metrics(spark, sink.state_dir).collect()}
+        assert paths == {"driver" if cap is None else "distributed"}, cap
+    assert got[None] == got[0]
+    assert {c for _, c in got[None]} == {"c1"} and len(got[None]) == 4
+
+
 @pytest.mark.parametrize("hamming_radius", [3, 5])
 def test_all_tiers_parity_with_batch_pipeline(spark, dirs, hamming_radius):
     """Stream == one-shot with simhash AND containment tiers enabled
@@ -556,6 +662,13 @@ def test_pinned_store_schemas_match_written_files(two_batch_sink):
         assert spark.read.schema(ddl).parquet(path).schema == inferred, store
     # the batch_id=N directory alone carries the hot record's batch id
     assert "batch_id" in spark.read.parquet(sink.hot_fps_path).columns
+    # each label delta is the one pyarrow-written file of its batch dir
+    for b in range(2):
+        d = os.path.join(sink.labels_path, f"batch_id={b}")
+        assert os.listdir(d) == ["labels.parquet"], d
+    assert "labels_update" in spark.read.parquet(
+        os.path.join(sink.state_dir, "batch_metrics")
+    ).columns
 
 
 def test_batch_metrics_record_candidate_fetch(two_batch_sink):
@@ -567,3 +680,8 @@ def test_batch_metrics_record_candidate_fetch(two_batch_sink):
     # fetch their partners through the isin pushdown
     assert m[0].docs_read == "none"
     assert m[1].docs_read == "isin" and m[1].n_cand_ids >= 80
+    # the observed and fetched counts: 40 docs per batch, batch 1's
+    # near-dups of batch 0 verify
+    assert m[0].rows_in == m[1].rows_in == 40
+    assert m[1].n_candidates >= m[1].n_pairs >= 40
+    assert {m[0].labels_update, m[1].labels_update} == {"driver"}

@@ -23,6 +23,8 @@ pathological inputs; hitting it raises (never silently wrong clusters).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -205,6 +207,29 @@ def connected_components(
 connected_components.last_iterations = 0
 
 
+def union_find_labels(edges: Iterable[tuple]) -> dict:
+    """{vertex: min vertex of its component} for every vertex of ``edges``
+    -- :func:`connected_components`' contract (self-loop vertices
+    included), computed on the driver for a graph that fits in memory.
+
+    Union-find with path halving; a union hangs the larger root under the
+    smaller, so every root is the minimum of its component."""
+    parent: dict = {}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for u, v in edges:
+        ru = find(parent.setdefault(u, u))
+        rv = find(parent.setdefault(v, v))
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {v: find(v) for v in parent}
+
+
 def incremental_components(
     prior_labels: DataFrame,
     new_edges: DataFrame,
@@ -231,7 +256,13 @@ def incremental_components(
     reaches them) and pass through unmodified.  Cost scales with the
     affected-component mass, not the corpus: two broadcast-sized
     semi-joins pick the touched members, and the iterative CC runs on
-    the mini-graph only."""
+    the mini-graph only.
+
+    The streaming label store (streaming/labels.py) labels a mini-graph
+    of up to its driver cap with :func:`union_find_labels` instead, since
+    at that size every hash-min iteration is per-job overhead; this is
+    its path above the cap, where neither the edges nor the touched
+    members may be brought to the driver."""
     ne = new_edges.select(F.col(id1).alias("id1"), F.col(id2).alias("id2"))
     new_vids = (
         ne.select(F.col("id1").alias("vid"))

@@ -37,8 +37,10 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import PipelineConfig, Preprocessing
 from ..functions import columns as C
@@ -46,6 +48,23 @@ from ..operators import lsh, minhash, simhash, suffix, verify
 from ..operators.components import connected_components, connected_components_twostar
 from ..session import empty_frame
 from ..sources.catalog import ParquetCatalog
+
+
+# the metrics ledger's schema: ``_log`` writes every row with it, and the
+# run's final ledger read passes it (as Spark's schema), so that read runs
+# no footer-inference job
+_METRICS_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("stage", pa.string()),
+        ("config_hash", pa.string()),
+        ("rows_in", pa.int64()),
+        ("rows_out", pa.int64()),
+        ("dropped", pa.int64()),
+        ("detail", pa.string()),
+        ("elapsed_s", pa.float64()),
+    ]
+)
 
 
 @dataclass
@@ -89,20 +108,6 @@ class NearDupPipeline:
 
     def _log(self, stage: str, rows_in: int, rows_out: int, dropped: int = 0,
              detail: str = "") -> None:
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                ("run_id", pa.string()),
-                ("stage", pa.string()),
-                ("config_hash", pa.string()),
-                ("rows_in", pa.int64()),
-                ("rows_out", pa.int64()),
-                ("dropped", pa.int64()),
-                ("detail", pa.string()),
-                ("elapsed_s", pa.float64()),
-            ]
-        )
         self.catalog.append_rows(
             [
                 {
@@ -117,7 +122,7 @@ class NearDupPipeline:
                 }
             ],
             "metrics",
-            schema=schema,
+            schema=_METRICS_SCHEMA,
         )
 
     def _log_partitions(self, stage: str, direction: str, df: DataFrame) -> None:
@@ -128,8 +133,6 @@ class NearDupPipeline:
         overhead for ~32 rows).  The count aggregates per
         spark_partition_id over the materialized stage output — parquet
         row-group stats make it a metadata-weight scan."""
-        import pyarrow as pa
-
         counts = (
             df.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count(F.lit(1)).alias("rows"))
@@ -178,8 +181,6 @@ class NearDupPipeline:
         )
 
     def _lineage(self, stage: str, input_desc: str) -> None:
-        import pyarrow as pa
-
         schema = pa.schema(
             [
                 ("run_id", pa.string()),
@@ -484,7 +485,9 @@ class NearDupPipeline:
 
         clusters = self._stage("clusters", build_clusters, verified)
 
-        metrics = self.catalog.read_ledger("metrics").filter(
+        metrics = self.catalog.read_ledger(
+            "metrics", schema=from_arrow_schema(_METRICS_SCHEMA)
+        ).filter(
             (F.col("run_id") == cfg.run_id) & (F.col("config_hash") == self.chash)
         )
         return PipelineResult(clusters=clusters, verified_pairs=verified, metrics=metrics)

@@ -42,14 +42,16 @@ class ParquetCatalog:
 
     def write(self, df: DataFrame, table: str, config_hash: str) -> DataFrame:
         """Atomic write-then-rename; returns the re-read DataFrame (reading
-        back cuts lineage — the durable analogue of localCheckpoint)."""
+        back cuts lineage — the durable analogue of localCheckpoint).  The
+        re-read takes the written frame's schema, so it runs no footer-
+        inference job; a resume's ``read`` infers it from the files."""
         final = self._path(table, config_hash)
         tmp = final + ".tmp-" + uuid.uuid4().hex[:8]
         df.write.mode("overwrite").parquet(tmp)
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
-        return self.spark.read.parquet(final)
+        return self.spark.read.schema(df.schema).parquet(final)
 
     def append(self, df: DataFrame, table: str) -> None:
         """Append-only sink (metrics / lineage ledgers)."""
@@ -73,8 +75,11 @@ class ParquetCatalog:
         tbl = pa.Table.from_pylist(rows, schema=schema)
         pq.write_table(tbl, os.path.join(d, f"ledger-{_uuid.uuid4().hex}.parquet"))
 
-    def read_ledger(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.warehouse, table))
+    def read_ledger(self, table: str, schema=None) -> DataFrame:
+        """A ledger table; pass its ``schema`` (DDL or StructType) to skip
+        the footer-inference job."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(os.path.join(self.warehouse, table))
 
     def drop(self, table: str, config_hash: str) -> None:
         p = self._path(table, config_hash)

@@ -217,7 +217,9 @@ class IncrementalAudioDedup:
         # deltas, latest batch wins at read time
         from .labels import update_labels
 
-        update_labels(self.spark, self.pairs_path, self.labels_path, batch_id)
+        labels_update, n_pairs = update_labels(
+            self.spark, self.pairs_path, self.labels_path, batch_id
+        )
 
         # persist state (all batch-keyed or append-only-by-construction)
         hot_rows = batch_hot.select(
@@ -249,10 +251,9 @@ class IncrementalAudioDedup:
             self.state_dir, "audio", batch_id,
             rows_in=batch_df.select("clip_id").count(),
             n_candidates=pairs.count(),
-            n_pairs=self.spark.read.parquet(
-                os.path.join(self.pairs_path, f"batch_id={int(batch_id)}")
-            ).count(),
+            n_pairs=n_pairs,
             started_at=t0,
+            labels_update=labels_update,
         )
         lm_new.unpersist()
         kept_new.unpersist()

@@ -37,8 +37,17 @@ overhead, so the sink keeps the job count small:
   and materialized once with ``localCheckpoint``.  The tiers' new-side
   frames (bands, docs, sims, fps) are JVM-side projections of it.
 * **Checkpointed candidates.**  The deduplicated union of every tier's
-  candidates is materialized once; verification, the candidate-id fetch
-  and the metrics count read it instead of re-running the history joins.
+  candidates is materialized once; verification and the candidate-id
+  fetch read it instead of re-running the history joins.
+* **Labels on the driver.**  The cluster-label update (streaming/labels.py)
+  fetches the batch's pairs and the prior components they touch with two
+  bounded collects, labels them with a Python union-find and writes the
+  delta with pyarrow; only a batch whose edges or touched members exceed
+  ``_ISIN_PUSHDOWN_CAP`` runs the iterative distributed hash-min.
+* **A metrics row without count jobs.**  ``rows_in`` and ``n_candidates``
+  are ``Observation`` s on the feature and candidate checkpoints, which
+  fill them as they materialize, and ``n_pairs`` is the label update's
+  edge fetch.
 * **Schema-pinned reads.**  Every store is read with its fixed schema
   (``STORE_SCHEMAS``), so no read launches a footer-inference job.
 * **One band file per partition per batch.**  The band rows are shuffled
@@ -75,7 +84,7 @@ from __future__ import annotations
 import os
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
@@ -134,13 +143,14 @@ class IncrementalDedup:
             return None
         return self._read(store)
 
-    def _features(self, batch_df: DataFrame) -> DataFrame:
+    def _features(self, batch_df: DataFrame, rows: Observation) -> DataFrame:
         """The batch's per-doc features from one read and one tokenization:
         MinHash signature, sorted xxhash64 gram array and gram count, plus
         the SimHash and the distinct winnowing fingerprints when their
         tiers are on.  The pandas UDFs sit in one projection, so Spark
         evaluates them in one Python pass; the result is materialized once
-        and every per-tier frame is a JVM-side projection of it."""
+        (``rows`` observes its row count ``n``) and every per-tier frame
+        is a JVM-side projection of it."""
         cfg = self.cfg
         docs = batch_df.select("clip_id", "transcript").withColumn(
             "tokens", _tokens_col(cfg)
@@ -168,6 +178,7 @@ class IncrementalDedup:
             )
             .withColumn("n_grams", F.size("tokens"))
             .drop("transcript", "tokens")
+            .observe(rows, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
 
@@ -177,7 +188,9 @@ class IncrementalDedup:
         t0 = time.time()
         cfg = self.cfg
         bid = int(batch_id)
-        feats = self._features(batch_df)
+        # row counts filled by the checkpoints' own jobs, for the metrics row
+        rows_obs, cand_obs = Observation(), Observation()
+        feats = self._features(batch_df, rows_obs)
         new_bands = minhash.explode_bands(feats, "clip_id", "minhash", cfg)
         # per-doc sorted gram-hash arrays + totals: the array-merge verify's
         # input shape, precomputed once per doc at ingest time
@@ -275,9 +288,12 @@ class IncrementalDedup:
                 else suffix.fingerprint_keys(hist_fps, "clip_id"),
             ))
 
-        cand = reduce(
-            DataFrame.unionByName, [t.select("id1", "id2") for t in tiers]
-        ).dropDuplicates(["id1", "id2"]).localCheckpoint()
+        cand = (
+            reduce(DataFrame.unionByName, [t.select("id1", "id2") for t in tiers])
+            .dropDuplicates(["id1", "id2"])
+            .observe(cand_obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
+        )
 
         # gram arrays for exactly the docs the candidates touch: new-batch
         # docs from the feature checkpoint; historical docs via a
@@ -326,7 +342,7 @@ class IncrementalDedup:
         # idempotence: one output dir per batch id, overwritten on replay
         pairs_dir = os.path.join(self.pairs_path, f"batch_id={bid}")
         verified.write.mode("overwrite").parquet(pairs_dir)
-        self._update_labels(batch_id)
+        labels_update, n_pairs = self._update_labels(batch_id)
         # one shuffle on bh_part: each band partition gets one file per
         # batch instead of one per input partition
         (
@@ -358,17 +374,17 @@ class IncrementalDedup:
                 os.path.join(self.hot_fps_path, f"batch_id={bid}")
             )
         # per-batch metrics row (batch-id-keyed file: replay overwrites);
-        # counts come from the checkpoints / the just-written tiny pair dir
+        # no count job: the checkpoints' observations and the label
+        # update's edge fetch hold the counts
         append_batch_metrics(
             self.state_dir, "text", batch_id,
-            rows_in=feats.count(),
-            n_candidates=cand.count(),
-            n_pairs=self.spark.read.schema(STORE_SCHEMAS["verified_pairs"])
-            .parquet(pairs_dir)
-            .count(),
+            rows_in=rows_obs.get["n"],
+            n_candidates=cand_obs.get["n"],
+            n_pairs=n_pairs,
             started_at=t0,
             n_cand_ids=n_cand_ids,
             docs_read=docs_read,
+            labels_update=labels_update,
         )
 
     def compact_stores(self, target_files_per_partition: int = 1) -> None:
@@ -426,10 +442,12 @@ class IncrementalDedup:
     # --- incremental cluster-label maintenance ---------------------------
     # (shared machinery + scale/replay rationale: streaming/labels.py)
 
-    def _update_labels(self, batch_id: int) -> None:
+    def _update_labels(self, batch_id: int) -> tuple[str, int]:
         from .labels import update_labels
 
-        update_labels(self.spark, self.pairs_path, self.labels_path, batch_id)
+        return update_labels(
+            self.spark, self.pairs_path, self.labels_path, batch_id
+        )
 
     def cluster_labels(self) -> DataFrame:
         from .labels import current_labels

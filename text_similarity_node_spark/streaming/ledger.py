@@ -8,6 +8,9 @@ would cost a job-submission round-trip per batch for a single row).  The
 text sink also records how it fetched historical docs: the number of
 distinct candidate ids (``n_cand_ids``) and the read path (``docs_read``:
 ``none``, ``isin`` or ``semi_join``); both are null for the other sinks.
+The text and audio sinks record which path their cluster-label update
+took (``labels_update``: ``driver`` or ``distributed``, see
+streaming/labels.py); it is null for the sinks that keep no labels.
 
 Idempotence matches the pair stores: the file name is keyed by batch_id,
 so a replayed batch OVERWRITES its own metrics row instead of appending a
@@ -45,6 +48,7 @@ def append_batch_metrics(
     started_at: float,
     n_cand_ids: int | None = None,
     docs_read: str | None = None,
+    labels_update: str | None = None,
 ) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -61,6 +65,7 @@ def append_batch_metrics(
             ("elapsed_s", pa.float64()),
             ("n_cand_ids", pa.int64()),
             ("docs_read", pa.string()),
+            ("labels_update", pa.string()),
         ]
     )
     tbl = pa.Table.from_pylist(
@@ -74,18 +79,25 @@ def append_batch_metrics(
                 "elapsed_s": float(time.time() - started_at),
                 "n_cand_ids": n_cand_ids,
                 "docs_read": docs_read,
+                "labels_update": labels_update,
             }
         ],
         schema=schema,
     )
-    pq.write_table(tbl, os.path.join(d, f"metrics-{sink}-b{int(batch_id)}.parquet"))
+    # store_schema=False: Spark reads the parquet schema, not the
+    # serialized Arrow schema pyarrow would add to the footer (~0.4 KB)
+    pq.write_table(
+        tbl, os.path.join(d, f"metrics-{sink}-b{int(batch_id)}.parquet"),
+        store_schema=False,
+    )
 
 
 # the pyarrow schema above as Spark DDL: the read is schema-pinned, so
-# rows written before the last two columns existed read them as null
+# rows written before the last three columns existed read them as null
 _METRICS_DDL = (
     "sink string, batch_id bigint, rows_in bigint, n_candidates bigint, "
-    "n_pairs bigint, elapsed_s double, n_cand_ids bigint, docs_read string"
+    "n_pairs bigint, elapsed_s double, n_cand_ids bigint, docs_read string, "
+    "labels_update string"
 )
 
 
